@@ -2,7 +2,6 @@ package graft
 
 import graft.queries.Registry
 import graft.warehouse.View
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times the headline query set at
   * SPARK_GRAFT_SF_DIR, writes the full metric JSON to bench.json, and
@@ -36,14 +35,20 @@ import org.apache.spark.sql.SparkSession
   *     median — the noise-robust series (this host shows ±4s VM noise;
   *     r3's x10/x12/q04/r01 "regressions" were it, and r9's
   *     single-sample 47 s x182 was the same failure mode on the
-  *     formerly rerun-exempt >=15 s tier). The library's own
-  *     model/candidate memo caches (trained k-means, minhash bands, ANN
-  *     candidates) are CLEARED before every rerun: a median that hits
-  *     the kmCache measures a TrieMap lookup, not the work (r6: x57
-  *     median 0.096 s vs cold 10.18 s was exactly that). Spark-level
-  *     caches (the warmed view) stay — legitimate shared state. A
-  *     model-training query's median can therefore exceed its cold run
-  *     when the cold freeloaded on a sibling's cache (x58 after x57).
+  *     formerly rerun-exempt >=15 s tier). Every library memo cache
+  *     (each `ops.Ckpt.Memo`: trained k-means, minhash bands, ANN
+  *     candidates, Report's monthly rollup …) is CLEARED before every
+  *     rerun by `Ckpt.clearAll`: a median that hits the kmCache
+  *     measures a TrieMap lookup, not the work (r6: x57 median 0.096 s
+  *     vs cold 10.18 s was exactly that; r02 read 0.08 s against a
+  *     2.2 s cold before the rollup was cleared too). The ONE
+  *     deliberate exception is View.dw, which is not a memo: derived-
+  *     view REUSE is the S3 operator itself (the reference recomputes
+  *     its view per query; we materialize once per session by design),
+  *     so the q/r-family reruns read the warm view and the view's build
+  *     cost is the q-family cold. A model-training query's median can
+  *     therefore exceed its cold run when the cold freeloaded on a
+  *     sibling's cache (x58 after x57).
   *   - reruns are scheduled as TWO FULL SWEEPS over the query set AFTER
   *     the cold sweep, not back-to-back per query (round-12 directive:
   *     round 11's x28–x38 block showed one ~90 s host-contention window
@@ -113,37 +118,7 @@ object Bench {
   val CanaryEverySlots = 40
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-bench-warehouse")
-      // The sweep-split rerun scheduler (see methodology scaladoc) puts
-      // ~230 queries between a query's cold run and its reruns; at the
-      // default 100-entry codegen class cache every rerun then pays
-      // full re-codegen (measured: a uniform ~+0.2-0.3 s floor on every
-      // sub-second median, +50 s on the median total). Sizing the cache
-      // to hold the whole query set's generated classes restores the
-      // warm-codegen steady state the medians are defined to measure,
-      // without giving up the sweeps' temporal separation.
-      .config("spark.sql.codegen.cache.maxEntries", "20000")
-      // Round-18 (guide §2.2/§2.4): let AQE re-optimize plans UNDER the
-      // library's memoized .cache()s. Off (the default), every cached
-      // frame pins the initial spark.sql.shuffle.partitions layout and
-      // every downstream stage of every cache consumer inherits it
-      // regardless of size; on, AQE coalesces each cached plan's
-      // exchanges to byte-appropriate counts — scale-adaptive at any
-      // size by construction (A/B/A-measured at sf0.1: q01 0.54 → 0.14 s,
-      // x100 −40%, graph family −20..35%, no row worse). Verify runs
-      // with the same flag so the oracle gate checks the benched session.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -172,23 +147,9 @@ object Bench {
     // cold-successful query as failed in the headline (nor enter it twice),
     // so reruns record nothing — they only contribute a sample or don't.
     def timeQuiet(name: String): Double = {
-      // Clear the library's model/candidate memo caches so the rerun
-      // measures steady-state COMPUTATION, not a memo-table hit (see
-      // methodology scaladoc). Clearing costs only unpersist calls.
-      // Report's monthly rollup counts as a memo here too: without the
-      // clear, r02's median was a 0.08 s cached-frame read against a
-      // 2.2 s cold — the exact "memo-warm tell" the baseline doc uses
-      // to reject sessions. The ONE deliberate exception is View.dw:
-      // derived-view REUSE is the S3 operator itself (the reference
-      // recomputes its view per query; we materialize once per session
-      // by design), so the q/r-family reruns read the warm view and the
-      // view's build cost is the q-family cold.
-      graft.ext.Dedup.clearCaches(spark)
-      graft.ext.TextAnalysis.clearCaches(spark)
-      graft.ext.Similarity.clearCaches(spark)
-      graft.ext.Curation.clearCaches(spark)
-      graft.queries.Report.clearCaches(spark)
-      graft.ops.Kmv.clearCaches(spark)
+      // Memo-cold rerun (see methodology scaladoc); clearing costs
+      // only unpersist calls.
+      graft.ops.Ckpt.clearAll(spark)
       try timed(Registry.queryMap(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save())
       catch { case e: Throwable =>
@@ -442,12 +403,6 @@ object Bench {
     val fileJson = json.dropRight(1) +
       s""","queries_min":${timesJson(mins)},"canaries":$canariesJson,"samples":$samplesJson}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), fileJson + "\n")
-    graft.ext.Dedup.clearCaches(spark)
-    graft.ext.TextAnalysis.clearCaches(spark)
-    graft.ext.Similarity.clearCaches(spark)
-    graft.ext.Curation.clearCaches(spark)
-    graft.queries.Report.clearCaches(spark)
-    graft.ops.Kmv.clearCaches(spark)
     spark.stop()
     // Printed after spark.stop() so no executor/log line can interleave.
     // The full JSON first, then the SHORT headline as the very last line:

@@ -12,7 +12,7 @@ import graft.functions.DotProduct
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *   // or programmatically:
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   builder.withExtensions(new GraftExtensions)   // as graft.Session does
   *
   * Installs the codegen'd `dot_product` expression as a persistent-style
   * builtin (visible to pure SQL: `SELECT dot_product(a, b)`), the same
@@ -21,7 +21,7 @@ import graft.functions.DotProduct
   * optimizer rule (N same-column percentiles → one sort buffer).
   * Extension-injected functions survive `spark.sql(...)` from any thread
   * and need no per-caller registration — the deployment shape for a
-  * shared cluster. The library's own Verify/Bench sessions install these
+  * shared cluster. The library's own session (graft.Session) installs these
   * extensions too, so the custom Catalyst surface runs under the driver
   * correctness gate end-to-end.
   */

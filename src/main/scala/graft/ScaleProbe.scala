@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe diagnostic: times the corpus-heavy gated queries at 1×
@@ -227,14 +226,7 @@ object ScaleProbe {
     "x100_mutual_knn", "x123_community_modularity", "x137_bfs_distances")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     // Corpus-only queries (they read documents.parquet and nothing else),
@@ -352,10 +344,7 @@ object ScaleProbe {
     }
 
     def timeQ(name: String, dir: String): Double = {
-      graft.ext.Dedup.clearCaches(spark)
-      graft.ext.Similarity.clearCaches(spark)
-      graft.ext.TextAnalysis.clearCaches(spark)
-      graft.ops.Kmv.clearCaches(spark)
+      graft.ops.Ckpt.clearAll(spark)
       val t0 = System.nanoTime()
       queries.Registry.queryMap(name)(spark, dir)
         .write.format("noop").mode("overwrite").save()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,19 +11,9 @@ object Verify {
       case Some(pfx) => name => pfx.split(',').exists(name.startsWith)
       case None      => _ => true
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Match Bench's session (round 18): the oracle gate must check the
-      // same planner configuration the bench times.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session: the oracle gate checks the planner
+    // configuration the bench times.
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -48,11 +37,6 @@ object Verify {
     val json = SparkEntry.oracleSql.filter(kv => nameFilter(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.ext.Dedup.clearCaches(spark)
-    graft.ext.TextAnalysis.clearCaches(spark)
-    graft.ext.Similarity.clearCaches(spark)
-    graft.queries.Report.clearCaches(spark)
-    graft.ops.Kmv.clearCaches(spark)
     spark.stop()
   }
 }

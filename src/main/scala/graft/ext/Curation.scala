@@ -223,19 +223,12 @@ object Curation {
       .orderBy("bucket")
   }
 
-  private val deltaCellCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Long), DataFrame]
+  private val deltaCellCache = graft.ops.Ckpt.Memo[Long]("Curation.deltaCellCache")
 
   /** Release this module's cached intermediates for a session — same
-    * contract as Dedup.clearCaches (recomputable `.cache()`s); Bench
-    * calls it between reruns alongside the sibling modules. */
+    * contract as Dedup.clearCaches (recomputable `.cache()`s). */
   def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    deltaCellCache.keys.filter(_._1 == spark).foreach { k =>
-      deltaCellCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "Curation.deltaCellCache")
-        df.unpersist(blocking = false)
-      }
-    }
+    graft.ops.Ckpt.clearModule(spark, "Curation")
 
   /** Incremental semantic dedup: verdict a DELTA batch of embeddings
     * against an existing CORPUS through its persisted LSH cell index —
@@ -272,10 +265,9 @@ object Curation {
     // verdict spine) — cached compute-once, the x251 candidate-probe
     // convention; Bench clears this between reruns like the sibling
     // module caches.
-    val di = graft.ops.Ckpt.memo(deltaCellCache,
-      (delta.sparkSession, PlanKeys.fingerprint(delta)),
-      graft.ops.Ckpt.registerCached(
-        Similarity.lshBuckets(delta).cache(), "Curation.deltaCellCache"))
+    val di = deltaCellCache(delta.sparkSession, PlanKeys.fingerprint(delta)) {
+      Similarity.lshBuckets(delta).cache()
+    }
     val widths = ci.select("bucket").unionByName(di.select("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("n_vecs"))
     val okCells = widths.filter(col("n_vecs") <= cellCap).select("bucket")

@@ -30,8 +30,7 @@ object Dedup {
   // pairs, exact Jaccard). Cache it per (session, source-plan) so a run
   // that uses three of them tokenizes once — the dedup-family analog of
   // the warehouse's materialized view reuse.
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, Long), DataFrame]
+  private val shingleCache = graft.ops.Ckpt.Memo[Long]("Dedup.shingleCache")
 
   /** Exact dedup: annotate every document with its content-hash group —
     * group size and whether this row is the canonical (min doc_id)
@@ -65,12 +64,9 @@ object Dedup {
     * aggregates and key joins.
     */
   def shingles(docs: DataFrame): DataFrame =
-    graft.ops.Ckpt.memo(shingleCache,
-      (docs.sparkSession, PlanKeys.fingerprint(docs)),
-      graft.ops.Ckpt.registerCached(
-        shingleRows(docs, Seq("doc_id"))
-          .distinct()
-          .cache(), "Dedup.shingleCache"))
+    shingleCache(docs.sparkSession, PlanKeys.fingerprint(docs)) {
+      shingleRows(docs, Seq("doc_id")).distinct().cache()
+    }
   // Explode-index + row distinct rather than array_distinct(transform(...)):
   // interpreted array lambdas cost ~10x vs the codegen'd exploded form; the
   // distinct shuffles only (doc_id, shingle) pairs.
@@ -84,13 +80,10 @@ object Dedup {
     * Banded into NumBands LSH keys; one shuffle (groupBy doc_id).
     */
   def minhashSignatures(docs: DataFrame): DataFrame =
-    graft.ops.Ckpt.memo(sigCache,
-      (docs.sparkSession, PlanKeys.fingerprint(docs)), {
-        val bands = (0 until NumBands).map(b => bandKey(b).as(s"band$b"))
-        graft.ops.Ckpt.registerCached(
-          rawSignatures(docs).select((col("doc_id") +: bands): _*).cache(),
-          "Dedup.sigCache")
-      })
+    sigCache(docs.sparkSession, PlanKeys.fingerprint(docs)) {
+      val bands = (0 until NumBands).map(b => bandKey(b).as(s"band$b"))
+      rawSignatures(docs).select((col("doc_id") +: bands): _*).cache()
+    }
 
   /** The raw k-minhash signature table (doc_id, mh0..mh{k-1}) — ONE
     * definition of the signature math, consumed by the banded cache
@@ -103,19 +96,16 @@ object Dedup {
     * — uncached, one x114 run paid the md5+conv signature pass three
     * times. */
   private def rawSignatures(docs: DataFrame): DataFrame =
-    graft.ops.Ckpt.memo(rawSigCache,
-      (docs.sparkSession, PlanKeys.fingerprint(docs)), {
-        val h = md5(col("shingle").cast("binary"))
-        val withH = shingles(docs).select(col("doc_id"),
-          conv(substring(h, 1, 8), 16, 10).cast("long").as("h1"),
-          conv(substring(h, 9, 8), 16, 10).cast("long").as("h2"))
-        val mhs = (0 until MinHashK).map { j =>
-          min((col("h1") + lit(j.toLong) * col("h2")) % lit(4294967296L)).as(s"mh$j")
-        }
-        graft.ops.Ckpt.registerCached(
-          withH.groupBy("doc_id").agg(mhs.head, mhs.tail: _*).cache(),
-          "Dedup.rawSigCache")
-      })
+    rawSigCache(docs.sparkSession, PlanKeys.fingerprint(docs)) {
+      val h = md5(col("shingle").cast("binary"))
+      val withH = shingles(docs).select(col("doc_id"),
+        conv(substring(h, 1, 8), 16, 10).cast("long").as("h1"),
+        conv(substring(h, 9, 8), 16, 10).cast("long").as("h2"))
+      val mhs = (0 until MinHashK).map { j =>
+        min((col("h1") + lit(j.toLong) * col("h2")) % lit(4294967296L)).as(s"mh$j")
+      }
+      withH.groupBy("doc_id").agg(mhs.head, mhs.tail: _*).cache()
+    }
 
   /** Band b's LSH key over the raw signature columns — the other half
     * of the one-definition kernel. */
@@ -123,16 +113,11 @@ object Dedup {
     md5(concat(col(s"mh${2 * b}").cast("string"), lit("|"),
       col(s"mh${2 * b + 1}").cast("string")).cast("binary"))
 
-  private val rawSigCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, Long), DataFrame]
-  private val sigCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, Long), DataFrame]
-  private val setCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, Long), DataFrame]
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, Long, Double, Int), DataFrame]
-  private val candCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, Long, Long, Int), DataFrame]
+  private val rawSigCache = graft.ops.Ckpt.Memo[Long]("Dedup.rawSigCache")
+  private val sigCache = graft.ops.Ckpt.Memo[Long]("Dedup.sigCache")
+  private val setCache = graft.ops.Ckpt.Memo[Long]("Dedup.setCache")
+  private val pairCache = graft.ops.Ckpt.Memo[(Long, Double, Int)]("Dedup.pairCache")
+  private val candCache = graft.ops.Ckpt.Memo[(Long, Long, Int)]("Dedup.candCache")
 
   /** LSH candidate pairs verified by exact Jaccard: docs sharing any band
     * bucket are candidates (equi-join on the band key — the whole point of
@@ -156,10 +141,9 @@ object Dedup {
     */
   def lshDedupPairs(docs: DataFrame, threshold: Double = 0.3,
       bucketCap: Int = 0): DataFrame =
-    graft.ops.Ckpt.memo(pairCache,
-      (docs.sparkSession, PlanKeys.fingerprint(docs), threshold, bucketCap),
-      graft.ops.Ckpt.registerCached(
-        lshDedupPairsUncached(docs, threshold, bucketCap).cache(), "Dedup.pairCache"))
+    pairCache(docs.sparkSession, (PlanKeys.fingerprint(docs), threshold, bucketCap)) {
+      lshDedupPairsUncached(docs, threshold, bucketCap).cache()
+    }
 
   /** The LSH band index: one (doc_id, band_idx, band_key) row per band
     * per document — the shape a production pipeline PERSISTS (partitioned
@@ -212,11 +196,9 @@ object Dedup {
     * shingle rows themselves. ONE definition shared by the dedup verify
     * paths and the calibration (x114). */
   private def shingleSets(docs: DataFrame): DataFrame =
-    graft.ops.Ckpt.memo(setCache,
-      (docs.sparkSession, PlanKeys.fingerprint(docs)),
-      graft.ops.Ckpt.registerCached(
-        shingles(docs).groupBy("doc_id").agg(collect_set(col("shingle")).as("sh")).cache(),
-        "Dedup.setCache"))
+    setCache(docs.sparkSession, PlanKeys.fingerprint(docs)) {
+      shingles(docs).groupBy("doc_id").agg(collect_set(col("shingle")).as("sh")).cache()
+    }
 
   private def lshDedupPairsUncached(docs: DataFrame, threshold: Double,
       bucketCap: Int): DataFrame = {
@@ -329,18 +311,16 @@ object Dedup {
     // pins the split-out [[incrementalCandidates]] builder directly.
     // Eager fill (see [[graft.ops.Ckpt.filled]]): the candidate probe is
     // referenced from three plan branches below, and AQE's concurrent
-    // query stages raced to fill the lazy cache — StageProbe measured
+    // query stages raced to fill the lazy cache — the stage probe measured
     // x251's Σtask dropping 10.0 → 3.1 s with the fill (the probe join
     // ran once instead of three times). The chain caches above
     // (shingles/signatures/pairs/sets) were measured too and deliberately
     // stay LAZY: no Σtask win there, and each fill serialized an extra
     // job that cost more wall than the (overlapping) duplicates did.
-    val cand = graft.ops.Ckpt.memo(candCache,
-      (corpus.sparkSession, PlanKeys.fingerprint(ci),
-        PlanKeys.fingerprint(di), bucketCap),
-      graft.ops.Ckpt.filled(graft.ops.Ckpt.registerCached(
-        incrementalCandidates(ci, di, bucketCap).cache(),
-        "Dedup.candCache")))
+    val cand = candCache(corpus.sparkSession,
+        (PlanKeys.fingerprint(ci), PlanKeys.fingerprint(di), bucketCap)) {
+      graft.ops.Ckpt.filled(incrementalCandidates(ci, di, bucketCap).cache())
+    }
 
     // Corpus text re-enters ONLY for matched candidates: the candidate
     // corpus-id set (delta-bounded) broadcasts as a left-semi filter.
@@ -1506,7 +1486,7 @@ object Dedup {
     duplicateClustersWithRounds(docs, threshold, maxIterations, bucketCap)._1
 
   /** [[duplicateClusters]] plus the number of large+small rounds the loop
-    * ran — the convergence diagnostic DedupProbe reports. `bucketCap`
+    * ran — the loop's convergence diagnostic. `bucketCap`
     * passes through to the pair stage (a 100 TB clustering run wants the
     * hot-bucket guard as much as the pair query does; losing a hot
     * bucket's pairs only coarsens components, never corrupts them).
@@ -1519,17 +1499,16 @@ object Dedup {
     // effective-token queries on one corpus would otherwise execute the
     // whole loop three times. The result frame reads the final round's
     // checkpoint blocks (which stay — the same lifetime the uncached
-    // path had); clearCaches drops the entry.
-    graft.ops.Ckpt.memo(clusterCache,
-      (docs.sparkSession, PlanKeys.fingerprint(docs), threshold,
-        maxIterations, bucketCap),
+    // path had); eviction drops the entry (its unpersist is a no-op).
+    clusterCache(docs.sparkSession,
+        (PlanKeys.fingerprint(docs), threshold, maxIterations, bucketCap)) {
       componentsFromEdges(
         lshDedupPairs(docs, threshold, bucketCap).select("doc_a", "doc_b"),
-        docs.select(col("doc_id")), maxIterations))
+        docs.select(col("doc_id")), maxIterations)
+    }
 
-  private val clusterCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Long, Double, Int, Int),
-      (DataFrame, Int)]
+  private val clusterCache = new graft.ops.Ckpt.Memo[(Long, Double, Int, Int),
+    (DataFrame, Int)]("Dedup.clusterCache", _._1)
 
   /** Generic two-phase large-star/small-star connected components over an
     * undirected edge list (`doc_a`/`doc_b` columns) — the loop behind
@@ -1615,33 +1594,8 @@ object Dedup {
     * call when a document corpus is done (long-lived drivers would
     * otherwise pin shingle/signature/pair blocks indefinitely).
     */
-  def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
-    Seq(shingleCache -> "Dedup.shingleCache", sigCache -> "Dedup.sigCache",
-      rawSigCache -> "Dedup.rawSigCache",
-      setCache -> "Dedup.setCache").foreach { case (c, owner) =>
-      c.keys.filter(_._1 == spark).foreach { k =>
-        c.remove(k).foreach { df =>
-          graft.ops.Ckpt.unregisterCached(df, owner)
-          df.unpersist(blocking = false)
-        }
-      }
-    }
-    pairCache.keys.filter(_._1 == spark).foreach { k =>
-      pairCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "Dedup.pairCache")
-        df.unpersist(blocking = false)
-      }
-    }
-    candCache.keys.filter(_._1 == spark).foreach { k =>
-      candCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "Dedup.candCache")
-        df.unpersist(blocking = false)
-      }
-    }
-    // Cluster results are not .cache()'d (they read the loop's final
-    // checkpoint blocks); dropping the entry is the whole cleanup.
-    clusterCache.keys.filter(_._1 == spark).foreach(clusterCache.remove)
-  }
+  def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
+    graft.ops.Ckpt.clearModule(spark, "Dedup")
 
   /** Scale guard for the inverted-index join: drop shingles present in
     * more than `maxDocFrac` of documents (stop-shingles dominate join

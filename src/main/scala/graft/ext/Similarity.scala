@@ -169,22 +169,21 @@ object Similarity {
     */
   def annPairs(embeddings: DataFrame, threshold: Double,
       bands: Int = AnnBands, bandBits: Int = AnnBandBits, bucketCap: Int = 0): DataFrame =
-    graft.ops.Ckpt.memo(pairsCache,
-      (embeddings.sparkSession, PlanKeys.fingerprint(embeddings),
-        math.round(threshold * 1e9), bands, bandBits, bucketCap), {
-        val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
-        // Eager fill (see [[graft.ops.Ckpt.filled]]): the graph queries
-        // consume this frame under a UNION (edges ∪ edges.swap) whose
-        // branches race to fill a lazy cache — measured on x99 as the
-        // whole cosine verify running twice.
-        graft.ops.Ckpt.filled(graft.ops.Ckpt.registerCached(
-          candidatePairs(embeddings, bands, bandBits, bucketCap)
-            .join(e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a")), Seq("vec_a"))
-            .join(e.select(col("vec_id").as("vec_b"), col("emb").as("emb_b")), Seq("vec_b"))
-            .select(col("vec_a"), col("vec_b"), dot(col("emb_a"), col("emb_b")).as("cosine"))
-            .filter(col("cosine") >= threshold)
-            .cache(), "Similarity.pairsCache"))
-      })
+    pairsCache(embeddings.sparkSession, (PlanKeys.fingerprint(embeddings),
+        math.round(threshold * 1e9), bands, bandBits, bucketCap)) {
+      val e = embeddings.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
+      // Eager fill (see [[graft.ops.Ckpt.filled]]): the graph queries
+      // consume this frame under a UNION (edges ∪ edges.swap) whose
+      // branches race to fill a lazy cache — measured on x99 as the
+      // whole cosine verify running twice.
+      graft.ops.Ckpt.filled(
+        candidatePairs(embeddings, bands, bandBits, bucketCap)
+          .join(e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a")), Seq("vec_a"))
+          .join(e.select(col("vec_id").as("vec_b"), col("emb").as("emb_b")), Seq("vec_b"))
+          .select(col("vec_a"), col("vec_b"), dot(col("emb_a"), col("emb_b")).as("cosine"))
+          .filter(col("cosine") >= threshold)
+          .cache())
+    }
 
   // The VERIFIED near-dup pairs are memoized like the banded candidate
   // core below (round-10 directive: the PageRank trio + BFS each consume
@@ -192,8 +191,8 @@ object Similarity {
   // degrees, so without this the cosine-verify join — the expensive
   // half — re-executed ~4x per query and once more per sibling query).
   // cache() keeps it lazy; memory is the near-dup PAIR set (3 columns,
-  // threshold-filtered), far smaller than the corpus. Released via
-  // clearCaches, which the bench invokes before every rerun so medians
+  // threshold-filtered), far smaller than the corpus. Released by
+  // Ckpt.clearAll, which the bench invokes before every rerun so medians
   // still measure steady-state computation. Within the bench's COLD
   // sweep the memo intentionally stays warm across sibling queries —
   // the cold series measures an end-to-end session that computes the
@@ -201,21 +200,19 @@ object Similarity {
   // steady-state number is the median series. Stated in Bench.scala's
   // methodology scaladoc (round-12 clarification, on advice).
   private val pairsCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (org.apache.spark.sql.SparkSession, Long, Long, Int, Int, Int), DataFrame]
+    graft.ops.Ckpt.Memo[(Long, Long, Int, Int, Int)]("Similarity.pairsCache")
 
   // annPairs and annTopK share the banded candidate set (x11 + x27 in one
   // run would otherwise band + distinct the corpus twice). Cached per
   // (session, source plan, banding params, shuffle parallelism) like the
-  // Dedup family's shingle frames; released via clearCaches from the
-  // entry points' teardown. The parallelism is part of the key (round-19,
+  // Dedup family's shingle frames; released by Ckpt.clearAll like
+  // every memo. The parallelism is part of the key (round-19,
   // on round-18 advice) because the uncapped-preset build bakes
   // numShufflePartitions into its pre-join repartition: without it, a
   // mid-session change of spark.sql.shuffle.partitions would keep
   // handing out a frame pinned to the stale parallelism.
   private val candCache =
-    scala.collection.concurrent.TrieMap.empty[
-      (org.apache.spark.sql.SparkSession, Long, Int, Int, Int, Int), DataFrame]
+    graft.ops.Ckpt.Memo[(Long, Int, Int, Int, Int)]("Similarity.candCache")
 
   /** Distinct undirected banded candidate pairs (vec_a < vec_b).
     *
@@ -231,77 +228,53 @@ object Similarity {
     */
   def candidatePairs(embeddings: DataFrame,
       bands: Int = AnnBands, bandBits: Int = AnnBandBits, bucketCap: Int = 0): DataFrame =
-    graft.ops.Ckpt.memo(candCache,
-      (embeddings.sparkSession, PlanKeys.fingerprint(embeddings),
+    candCache(embeddings.sparkSession, (PlanKeys.fingerprint(embeddings),
         bands, bandBits, bucketCap,
-        embeddings.sparkSession.sessionState.conf.numShufflePartitions), {
-        // UNCAPPED presets only: the band table is the lightweight PROXY
-        // (a few longs per vector·band) and the self-join below fans it
-        // out by the full bucket width — repartition it on the join key
-        // at the session's configured shuffle parallelism (round-18):
-        // byte-based AQE coalescing sizes the exchange for the proxy's
-        // KBs, blind to the fan-out, and the dense preset's pair stage
-        // ran as ONE task (measured 1.9 s serial inside x27). The window
-        // and the join reuse this one exchange, so no shuffle is added.
-        // CAPPED presets skip it: the cap bounds the fan-out to ≤ cap
-        // per row by construction, and the pinned exchange measurably
-        // cost more than the bounded fan-out saved.
-        val banded0 = annBands(embeddings, bands, bandBits)
-        val banded =
-          if (bucketCap > 0) banded0
-          else banded0.repartition(
-            embeddings.sparkSession.sessionState.conf.numShufflePartitions,
-            col("band_idx"), col("band_key"))
-        // One pass: the bucket width rides a window over the band table
-        // (the Dedup.bandedCandidates discipline) — the aggregate-then-
-        // rejoin first cut scanned the corpus-wide banding projection
-        // twice.
-        val kept =
-          if (bucketCap <= 0) banded
-          else banded
-            .withColumn("_bucket_width", count(lit(1)).over(
-              Window.partitionBy("band_idx", "band_key")))
-            .filter(col("_bucket_width") <= bucketCap)
-            .drop("_bucket_width")
-        val a = kept.select(col("band_idx"), col("band_key"), col("vec_id").as("vec_a"))
-        val b = kept.select(col("band_idx"), col("band_key"), col("vec_id").as("vec_b"))
-        // Eager fill (see [[graft.ops.Ckpt.filled]]): annTopK consumers
-        // read this frame under direction unions whose AQE stages race
-        // to fill a lazy cache, re-running the banded self-join per
-        // branch.
-        graft.ops.Ckpt.filled(graft.ops.Ckpt.registerCached(
-          a.join(b, Seq("band_idx", "band_key"))
-            .filter(col("vec_a") < col("vec_b"))
-            .select("vec_a", "vec_b").distinct()
-            .cache(), "Similarity.candCache"))
-      })
+        embeddings.sparkSession.sessionState.conf.numShufflePartitions)) {
+      // UNCAPPED presets only: the band table is the lightweight PROXY
+      // (a few longs per vector·band) and the self-join below fans it
+      // out by the full bucket width — repartition it on the join key
+      // at the session's configured shuffle parallelism (round-18):
+      // byte-based AQE coalescing sizes the exchange for the proxy's
+      // KBs, blind to the fan-out, and the dense preset's pair stage
+      // ran as ONE task (measured 1.9 s serial inside x27). The window
+      // and the join reuse this one exchange, so no shuffle is added.
+      // CAPPED presets skip it: the cap bounds the fan-out to ≤ cap
+      // per row by construction, and the pinned exchange measurably
+      // cost more than the bounded fan-out saved.
+      val banded0 = annBands(embeddings, bands, bandBits)
+      val banded =
+        if (bucketCap > 0) banded0
+        else banded0.repartition(
+          embeddings.sparkSession.sessionState.conf.numShufflePartitions,
+          col("band_idx"), col("band_key"))
+      // One pass: the bucket width rides a window over the band table
+      // (the Dedup.bandedCandidates discipline) — the aggregate-then-
+      // rejoin first cut scanned the corpus-wide banding projection
+      // twice.
+      val kept =
+        if (bucketCap <= 0) banded
+        else banded
+          .withColumn("_bucket_width", count(lit(1)).over(
+            Window.partitionBy("band_idx", "band_key")))
+          .filter(col("_bucket_width") <= bucketCap)
+          .drop("_bucket_width")
+      val a = kept.select(col("band_idx"), col("band_key"), col("vec_id").as("vec_a"))
+      val b = kept.select(col("band_idx"), col("band_key"), col("vec_id").as("vec_b"))
+      // Eager fill (see [[graft.ops.Ckpt.filled]]): annTopK consumers
+      // read this frame under direction unions whose AQE stages race
+      // to fill a lazy cache, re-running the banded self-join per
+      // branch.
+      graft.ops.Ckpt.filled(
+        a.join(b, Seq("band_idx", "band_key"))
+          .filter(col("vec_a") < col("vec_b"))
+          .select("vec_a", "vec_b").distinct()
+          .cache())
+    }
 
   /** Release cached candidate frames and trained models for a session. */
-  def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit = {
-    pairsCache.keys.filter(_._1 == spark).foreach { k =>
-      pairsCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "Similarity.pairsCache")
-        df.unpersist(blocking = false)
-      }
-    }
-    candCache.keys.filter(_._1 == spark).foreach { k =>
-      candCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "Similarity.candCache")
-        df.unpersist(blocking = false)
-      }
-    }
-    kmCache.keys.filter(_._1 == spark).foreach { k =>
-      // The label frame is a recomputable .cache() (never a tracked
-      // checkpoint — those are strictly loop-internal, see ops.Ckpt):
-      // unpersist drops the blocks, and a caller still holding a
-      // previously returned labels frame transparently recomputes one
-      // corpus pass (scan + broadcast argmin) on its next action.
-      kmCache.remove(k).foreach { case (_, df) =>
-        graft.ops.Ckpt.unregisterCached(df, "Similarity.kmCache")
-        df.unpersist(blocking = false)
-      }
-    }
-  }
+  def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
+    graft.ops.Ckpt.clearModule(spark, "Similarity")
 
   /** The banded signature table: (vec_id, band_idx, band_key), AnnBands
     * rows per vector — the shared candidate-generation core of
@@ -1102,7 +1075,7 @@ object Similarity {
       maxIterations)._1
 
   /** [[annClusters]] plus the contraction-round count — the convergence
-    * diagnostic (DedupProbe), mirroring Dedup.duplicateClustersWithRounds
+    * diagnostic, mirroring Dedup.duplicateClustersWithRounds
     * so diagnostics measure the SAME path the registered query runs.
     */
   def annClustersWithRounds(embeddings: DataFrame, threshold: Double,
@@ -1555,16 +1528,15 @@ object Similarity {
   // only a recomputable storage level makes eviction safe: unpersist
   // drops the blocks, a held frame recomputes one broadcast-argmin pass.
   // ops.Ckpt handles are strictly loop-internal (no external readers).
-  private val kmCache = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, Long, Int, Int, Double),
-    (Array[Array[Double]], DataFrame)]
+  private val kmCache = new graft.ops.Ckpt.Memo[(Long, Int, Int, Double),
+    (Array[Array[Double]], DataFrame)]("Similarity.kmCache", _._2)
 
   def kMeans(embeddings: DataFrame, k: Int, iterations: Int = 5, snapScale: Double = 0)
       : (Array[Array[Double]], DataFrame) =
-    graft.ops.Ckpt.memo(kmCache,
-      (embeddings.sparkSession, PlanKeys.fingerprint(embeddings),
-        k, iterations, snapScale),
-      kMeansUncached(embeddings, k, iterations, snapScale))
+    kmCache(embeddings.sparkSession,
+        (PlanKeys.fingerprint(embeddings), k, iterations, snapScale)) {
+      kMeansUncached(embeddings, k, iterations, snapScale)
+    }
 
   private def kMeansUncached(embeddings: DataFrame, k: Int, iterations: Int,
       snapScale: Double): (Array[Array[Double]], DataFrame) = {
@@ -1626,8 +1598,7 @@ object Similarity {
     // blocks survives). Deliberately NOT a tracked localCheckpoint: this
     // frame is handed out to callers, and unreliable-checkpoint blocks
     // are unrecomputable once released — the round-12 use-after-free.
-    val result = graft.ops.Ckpt.registerCached(
-      assigned.select("vec_id", "cluster", "score").cache(), "Similarity.kmCache")
+    val result = assigned.select("vec_id", "cluster", "score").cache()
     result.count()
     e.unpersist(blocking = false)
     (centroids, result)

@@ -1046,16 +1046,13 @@ object TextAnalysis {
   /** The corpus word-count table [[bpe]] and [[bpeFertility]] learn from
     * (lowercase-alpha words ≤ 20 chars — bounds fold depth and the
     * oracle's recursion). */
-  private def bpeWords(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
-    graft.ops.Ckpt.memo(wordCache,
-      (spark, PlanKeys.fingerprint(docs)),
-      graft.ops.Ckpt.registerCached(
-        docs.select(explode(tokens(col("text"))).as("word"))
-          .where(col("word").rlike("^[a-z]{1,20}$"))
-          .groupBy("word").agg(count(lit(1)).as("cnt"))
-          .cache(), "TextAnalysis.wordCache"))
-  }
+  private def bpeWords(docs: DataFrame): DataFrame =
+    wordCache(docs.sparkSession, PlanKeys.fingerprint(docs)) {
+      docs.select(explode(tokens(col("text"))).as("word"))
+        .where(col("word").rlike("^[a-z]{1,20}$"))
+        .groupBy("word").agg(count(lit(1)).as("cnt"))
+        .cache()
+    }
 
   /** The learning loop shared by [[bpe]] and [[bpeFertility]]: per round
     * ONE map-side-combinable pair aggregate over the vocab-bounded word
@@ -1103,20 +1100,14 @@ object TextAnalysis {
 
   // Word-count table shared by the two BPE queries (merges + vocab in one
   // run would otherwise scan and aggregate the corpus twice) — cached per
-  // (session, source plan) like Similarity.candCache; released via
-  // clearCaches from the entry points' teardown. Bounded by vocabulary
+  // (session, source plan) like Similarity.candCache; released by
+  // Ckpt.clearAll like every memo. Bounded by vocabulary
   // size, which grows sublinearly in the corpus (Heaps' law).
-  private val wordCache = scala.collection.concurrent.TrieMap.empty[
-    (org.apache.spark.sql.SparkSession, Long), DataFrame]
+  private val wordCache = graft.ops.Ckpt.Memo[Long]("TextAnalysis.wordCache")
 
   /** Release cached word-count frames for a session. */
   def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    wordCache.keys.filter(_._1 == spark).foreach { k =>
-      wordCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "TextAnalysis.wordCache")
-        df.unpersist(blocking = false)
-      }
-    }
+    graft.ops.Ckpt.clearModule(spark, "TextAnalysis")
 
   /** Count-min sketch token counting (Cormode & Muthukrishnan 2005) —
     * the mergeable bounded-memory counting sketch, evaluated against

@@ -1,7 +1,6 @@
 package graft.io
 
 import graft.model.Validate
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executable example: the data-engineering surface — constraint
@@ -12,21 +11,17 @@ import org.apache.spark.sql.functions._
 object LayoutDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-demo-wh").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val t = Tables(spark, dir)
 
     val violations = Validate.validateStar(t)
     println(s"[layout] constraint violations: ${if (violations.isEmpty) "none" else violations.mkString("; ")}")
 
+    // The session's warehouse outlives it, and saveAsTable refuses a
+    // managed-table location a previous run left behind.
+    val warehouse = java.net.URI.create(spark.conf.get("spark.sql.warehouse.dir")).getPath
+    Seq("orders_b", "lineitem_b").foreach(tbl =>
+      new scala.reflect.io.Directory(new java.io.File(warehouse, tbl)).deleteRecursively())
     Layout.writeBucketed(t.orders, "orders_b", "o_orderkey", numBuckets = 8)
     Layout.writeBucketed(t.lineitem, "lineitem_b", "l_orderkey", numBuckets = 8)
     val joined = spark.table("lineitem_b")

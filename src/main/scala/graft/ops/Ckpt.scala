@@ -1,7 +1,10 @@
 package graft.ops
 
 import org.apache.spark.SparkContext
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
 /** Deterministic block release for `localCheckpoint`'d loop state.
   *
@@ -77,45 +80,86 @@ object Ckpt {
     }
   }
 
-  /** Identity key for the lock map below: the cache itself is a MUTABLE
-    * TrieMap whose content-based equals/hashCode change with every
-    * insert, so keying locks by the map value would strand every
-    * existing lock entry the moment the cache gains an entry (stale
-    * unremovable growth) — and worse, two threads first-building the
-    * same key could hash the tuple differently if the cache mutates
-    * between their lookups, acquire DIFFERENT locks, and both build:
-    * exactly the double-registerCached leak memo exists to close.
-    * Reference identity is the only stable notion of "the same cache". */
-  private final class IdKey(val ref: AnyRef) {
-    override def hashCode: Int = System.identityHashCode(ref)
-    override def equals(o: Any): Boolean = o match {
-      case k: IdKey => k.ref eq ref
-      case _        => false
+  /** A library memo cache: one per cached intermediate, keyed per
+    * session. The instance owns its entries, its owner string (the name
+    * the [[registerCached]] registry reports), its per-key build lock,
+    * the registration of every frame it builds, and the unregister +
+    * unpersist of every frame it evicts. Each instance joins [[memos]]
+    * when constructed, so [[clearAll]] reaches it without a hand-kept
+    * list. `frameOf` picks the frame a value hands out (the value itself
+    * for DataFrame memos).
+    *
+    * Stored frames must be recomputable (`.cache()`, or a plan over
+    * blocks nobody releases — never a tracked checkpoint a [[Handle]]
+    * may free): eviction only drops blocks, and a caller still holding
+    * a handed-out frame recomputes it on its next action.
+    */
+  final class Memo[K, V](val owner: String, frameOf: V => DataFrame) {
+    private val entries = TrieMap.empty[(SparkSession, K), V]
+    private val locks = TrieMap.empty[(SparkSession, K), Object]
+    memos.add(this)
+
+    /** Atomic memo insert: TrieMap.getOrElseUpdate does NOT evaluate
+      * its builder atomically, so two threads racing on the first build
+      * for the same key would BOTH build and register a frame — the
+      * loser's registration (and cache buffer) then leaks because
+      * eviction only unregisters the stored frame. The lock is PER key,
+      * not per cache: some builds run real Spark jobs (k-means training,
+      * the clustering loop), and a cache-wide lock would serialize
+      * unrelated keys behind them. Lock objects are tiny and bounded by
+      * the number of distinct keys ever built. */
+    def apply(spark: SparkSession, key: K)(build: => V): V = {
+      val k = (spark, key)
+      entries.getOrElse(k, {
+        val candidate = new Object
+        locks.putIfAbsent(k, candidate).getOrElse(candidate).synchronized {
+          entries.getOrElse(k, {
+            val v = build
+            registerCached(frameOf(v), owner)
+            entries.put(k, v)
+            v
+          })
+        }
+      })
     }
+
+    private[graft] def nonEmpty(spark: SparkSession): Boolean =
+      entries.keys.exists(_._1 == spark)
+
+    /** Evict every entry built in `spark`. */
+    def clear(spark: SparkSession): Unit =
+      entries.keys.filter(_._1 == spark).foreach { k =>
+        entries.remove(k).map(frameOf).foreach { df =>
+          unregisterCached(df, owner)
+          df.unpersist(blocking = false)
+        }
+      }
   }
 
-  private val memoLocks =
-    scala.collection.concurrent.TrieMap.empty[(IdKey, Any), Object]
+  object Memo {
+    def apply[K](owner: String): Memo[K, DataFrame] = new Memo(owner, identity)
+  }
 
-  /** Atomic memo-cache insert: TrieMap.getOrElseUpdate does NOT
-    * evaluate its builder atomically, so two threads racing on the
-    * first build for the same key would BOTH build and
-    * [[registerCached]] a frame — the loser's registration (and cache
-    * buffer) then leaks because clearCaches only unregisters the stored
-    * frame. The lock is PER (cache, key), not per cache map: some
-    * builds run real Spark jobs (k-means training, the clustering
-    * loop), and a map-wide lock would serialize unrelated keys behind
-    * them. Lock objects are tiny and bounded by the number of distinct
-    * keys ever built; every library memo cache inserts through this. */
-  def memo[K, V](cache: scala.collection.concurrent.TrieMap[K, V],
-      key: K, build: => V): V =
-    cache.get(key).getOrElse {
-      val candidate = new Object
-      val lock = memoLocks.putIfAbsent((new IdKey(cache), key), candidate)
-        .getOrElse(candidate)
-      lock.synchronized {
-        cache.get(key).getOrElse { val v = build; cache.put(key, v); v }
-      }
+  private val memos = new java.util.concurrent.CopyOnWriteArrayList[Memo[_, _]]
+
+  /** Evict every registered memo cache for `spark`. `View.dw` is not a
+    * memo: reusing the view is the engine's design (see Bench). */
+  def clearAll(spark: SparkSession): Unit = memos.forEach(_.clear(spark))
+
+  /** Evict the memo caches whose owner is `module.*` — the body of each
+    * module's public `clearCaches`. */
+  def clearModule(spark: SparkSession, module: String): Unit =
+    memos.forEach(m => if (m.owner.startsWith(module + ".")) m.clear(spark))
+
+  /** Owners of the memo caches holding an entry for `spark`. */
+  private[graft] def memoOwners(spark: SparkSession): Set[String] =
+    memos.asScala.filter(_.nonEmpty(spark)).map(_.owner).toSet
+
+  /** Owners still registered as readers in `spark`'s context. */
+  private[graft] def registeredOwners(spark: SparkSession): Set[String] =
+    cachedReaders.synchronized {
+      cachedReaders.collect { case ((sc, _), os) if sc eq spark.sparkContext => os }
+        .flatten.toSet
     }
 
   /** Materialize a lazy `.cache()` frame before a memo hands it out
@@ -132,10 +176,9 @@ object Ckpt {
     * the first consumer materializes the frame anyway. */
   def filled(df: DataFrame): DataFrame = { df.count(); df }
 
-  /** Register a frame a cache is about to store/hand out. Returns the
-    * frame for call-site convenience (`Ckpt.memo(cache, k,
-    * Ckpt.registerCached(build, "Foo.barCache"))` — the build argument
-    * is by-name, so registration still runs only on first build). */
+  /** Register a frame a cache is about to store/hand out ([[Memo]]
+    * does this for every frame it builds; `View.dw` calls it directly).
+    * Returns the frame for call-site convenience. */
   def registerCached(df: DataFrame, owner: String): DataFrame = {
     val ids = logicalRddIds(df)
     cachedReaders.synchronized {

@@ -116,37 +116,29 @@ object Kmv {
   // m-row .cache() makes the corpus-scale aggregate run once. Held
   // frames survive clearCaches by recomputation (the r13 Ckpt ownership
   // contract — CachesSpec pins the family).
-  private val sketchCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Long, Int), DataFrame]
+  private val sketchCache = Ckpt.Memo[(Long, Int)]("Kmv.sketchCache")
 
   /** Per-source bottom-k sketches: (source, sk array<long>). Shared by
     * [[intersectionBySource]], [[cardinalityBySource]], and the
     * streaming monitor's batch-equivalence spec. */
   private[graft] def sketchesOf(docs: DataFrame, k: Int): DataFrame =
-    graft.ops.Ckpt.memo(sketchCache,
-      (docs.sparkSession, graft.ext.PlanKeys.fingerprint(docs), k),
-      Ckpt.registerCached({
-        // (source, shingle) occurrences — the shared shingle kernel
-        // joined back to each doc's source (co-partitioned equi-join on
-        // doc_id; BottomK needs occurrences, not a distinct pass).
-        val sh = Dedup.shingles(docs)
-          .join(docs.select(col("doc_id"), col("source")), "doc_id")
-        sh.select(col("source"), hash32(col("shingle")).as("h"))
-          .groupBy("source")
-          .agg(udaf(BottomK(k)).apply(col("h")).as("sk"))
-          .cache()
-      }, "Kmv.sketchCache"))
+    sketchCache(docs.sparkSession, (graft.ext.PlanKeys.fingerprint(docs), k)) {
+      // (source, shingle) occurrences — the shared shingle kernel
+      // joined back to each doc's source (co-partitioned equi-join on
+      // doc_id; BottomK needs occurrences, not a distinct pass).
+      val sh = Dedup.shingles(docs)
+        .join(docs.select(col("doc_id"), col("source")), "doc_id")
+      sh.select(col("source"), hash32(col("shingle")).as("h"))
+        .groupBy("source")
+        .agg(udaf(BottomK(k)).apply(col("h")).as("sk"))
+        .cache()
+    }
 
   /** Release this module's cached sketches for a session — same
     * contract as Dedup.clearCaches: frames are recomputable `.cache()`s,
     * so caller-held references survive by recomputation. */
   def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    sketchCache.keys.filter(_._1 == spark).foreach { key =>
-      sketchCache.remove(key).foreach { df =>
-        Ckpt.unregisterCached(df, "Kmv.sketchCache")
-        df.unpersist(blocking = false)
-      }
-    }
+    Ckpt.clearModule(spark, "Kmv")
 
   /** The KMV estimator on a MATERIALIZED (sorted-ascending, distinct)
     * sketch — the JVM twin of the DataFrame paths' estimate tree, for

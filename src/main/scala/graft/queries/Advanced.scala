@@ -2257,7 +2257,7 @@ object Advanced {
     // cumulative-count order statistics, MAD histogram folded from the
     // price histogram so only ONE corpus aggregate remains) was built
     // and measured in two spellings — both ~1.5-1.6x SLOWER steady-state
-    // at sf0.1 (StageProbe 2.0-2.3 s wall / Σtask 1.1-1.3 vs 1.26 s /
+    // at sf0.1 (Probe stages: 2.0-2.3 s wall / Σtask 1.1-1.3 vs 1.26 s /
     // 0.71 for this shape) and +4 scheduling-bound jobs, so it was
     // REVERTED. The premise overstated the funnel: `percentile` is a
     // partial-aggregating ObjectHashAggregate whose per-group buffer is

@@ -20,32 +20,25 @@ object Report {
   // aggregate. Compute it once per (session, dir) and cache — the same
   // derived-view reuse View.dw applies to the customer grain (and the
   // same move a 100 TB run makes by materializing the monthly rollup).
-  private val monthlyCache =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), org.apache.spark.sql.DataFrame]
+  private val monthlyCache = graft.ops.Ckpt.Memo[String]("Report.monthlyCache")
 
   private def monthlyRevenue(s: org.apache.spark.sql.SparkSession, dir: String) =
-    monthlyCache.getOrElseUpdate((s, dir), {
+    monthlyCache(s, dir) {
       val t = Tables(s, dir)
-      graft.ops.Ckpt.registerCached(
-        t.lineitem.join(t.orders, col("l_orderkey") === col("o_orderkey"))
-          .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
-          .agg(
-            countDistinct(col("o_orderkey")).as("n_orders"),
-            moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("total_revenue"))
-          .cache(), "Report.monthlyCache")
-    })
+      t.lineitem.join(t.orders, col("l_orderkey") === col("o_orderkey"))
+        .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"))
+        .agg(
+          countDistinct(col("o_orderkey")).as("n_orders"),
+          moneySum(col("l_extendedprice") * (lit(1) - col("l_discount"))).as("total_revenue"))
+        .cache()
+    }
 
   /** Release this module's cached frames for a session (same teardown
     * contract as Dedup/Similarity.clearCaches; inputs are assumed
     * immutable for the life of a session, like every cache here).
     */
   def clearCaches(spark: org.apache.spark.sql.SparkSession): Unit =
-    monthlyCache.keys.filter(_._1 == spark).foreach { k =>
-      monthlyCache.remove(k).foreach { df =>
-        graft.ops.Ckpt.unregisterCached(df, "Report.monthlyCache")
-        df.unpersist(blocking = false)
-      }
-    }
+    graft.ops.Ckpt.clearModule(spark, "Report")
 
   val defs: Seq[QueryDef] = Seq(
     // Report Query 2: ROUND(AVG(Avg_Spending_Per_Rental),2) by country.

@@ -1,6 +1,5 @@
 package graft.sakila
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executable example: the reference user's workflow on this engine —
@@ -12,14 +11,7 @@ import org.apache.spark.sql.functions._
 object SakilaDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("src/test/resources/sakila")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
 
     val dw = Sakila.revenueView(SakilaTables(spark, dir)).cache()
     println(s"[sakila] customer_revenue_summary: ${dw.count()} customers")

@@ -12,7 +12,9 @@ import graft.ops.Ckpt
   * blocks are unrecomputable once released — the round-12 kmCache
   * use-after-free). One held-frame-across-clearCaches test per cached
   * family, plus the mechanical tripwire: `Ckpt.Handle.release` throws if
-  * a registered cache entry still reads the handle's RDDs.
+  * a registered cache entry still reads the handle's RDDs. One test
+  * that `Ckpt.clearAll` reaches every memo family, and a lint that keeps
+  * every DataFrame-valued TrieMap inside the `Ckpt.Memo` registry.
   */
 class CachesSpec extends SparkSuite {
   private def docs = spark.read.parquet(s"$Sf/documents.parquet")
@@ -32,26 +34,88 @@ class CachesSpec extends SparkSuite {
     h.release() // legal now; ck is unrecomputable past this point
   }
 
-  test("lint: no cache map may store a Ckpt.Handle (loop-internal only)") {
+  /** Every src/main source file with comments/scaladoc stripped: a doc
+    * sentence merely MENTIONING a type in a cache-bearing module must not
+    * fail a lint — only code that actually names it. */
+  private def mainSources: List[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    // Comments/scaladoc stripped first: a doc sentence merely MENTIONING
-    // Ckpt.Handle in a cache-bearing module must not fail the build —
-    // only code that actually names the type next to a memo map does.
-    def stripComments(src: String): String = src
-      .replaceAll("(?s)/\\*.*?\\*/", "")
-      .replaceAll("//.*", "")
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val offenders =
-      try walk.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter { p =>
-          val src = stripComments(
-            new String(java.nio.file.Files.readAllBytes(p)))
-          src.contains("TrieMap") && src.contains("Ckpt.Handle")
-        }.toList
-      finally walk.close()
+    try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p))
+        .replaceAll("(?s)/\\*.*?\\*/", "")
+        .replaceAll("//.*", ""))
+      .toList
+    finally walk.close()
+  }
+
+  test("lint: no cache map may store a Ckpt.Handle (loop-internal only)") {
+    val offenders = mainSources.collect {
+      case (p, src) if src.contains("TrieMap") && src.contains("Ckpt.Handle") => p
+    }
     assert(offenders.isEmpty,
       s"Ckpt.Handle stored in a memo cache (the r12 use-after-free shape): $offenders")
+  }
+
+  test("lint: DataFrame memo maps live only in ops.Ckpt and warehouse.View") {
+    // The type arguments of each TrieMap mention: the bracketed text
+    // after "TrieMap" (past an optional ".empty"), brackets balanced.
+    def trieMapTypeArgs(src: String): Iterator[String] =
+      "TrieMap\\s*(\\.\\s*empty\\s*)?\\[".r.findAllMatchIn(src).map { m =>
+        var (depth, i) = (1, m.end)
+        while (depth > 0 && i < src.length) {
+          if (src(i) == '[') depth += 1 else if (src(i) == ']') depth -= 1
+          i += 1
+        }
+        src.substring(m.end, i)
+      }
+    val allowed = Set("ops/Ckpt.scala", "warehouse/View.scala")
+    val offenders = mainSources.collect {
+      case (p, src) if !allowed.exists(p.endsWith) &&
+          trieMapTypeArgs(src).exists(_.contains("DataFrame")) => p
+    }
+    assert(offenders.isEmpty,
+      s"DataFrame memo map outside the Ckpt.Memo registry (declare a " +
+        s"Ckpt.Memo so clearAll reaches it): $offenders")
+  }
+
+  test("Ckpt.clearAll empties every memo family and keeps View.dw") {
+    import org.apache.spark.sql.functions.col
+    import graft.ext.{Curation, Pipeline}
+    val memoFamilies = Set("Dedup.shingleCache", "Dedup.sigCache",
+      "Dedup.rawSigCache", "Dedup.setCache", "Dedup.pairCache",
+      "Dedup.candCache", "Dedup.clusterCache", "Similarity.pairsCache",
+      "Similarity.candCache", "Similarity.kmCache", "TextAnalysis.wordCache",
+      "Curation.deltaCellCache", "Kmv.sketchCache", "Report.monthlyCache")
+    Ckpt.clearAll(spark)
+    val view = graft.warehouse.View.dw(spark, Sf)
+    view.count()
+    // Entries other suites in this JVM left behind are not this test's.
+    val baseline = org.apache.spark.sql.CachedEntries(spark)
+
+    val u = Pipeline.saltedUniform(col("doc_id"), "caches|")
+    val ue = Pipeline.saltedUniform(col("vec_id"), "caches|")
+    Seq(
+      Dedup.minhashSignatures(docs), // shingles, raw signatures, signatures
+      Dedup.lshDedupPairs(docs), // pairs, sets
+      Dedup.incrementalLshDedup(docs.filter(u >= 0.25), docs.filter(u < 0.25)),
+      Dedup.duplicateClusters(docs),
+      Similarity.annPairs(emb, 0.8), // candidates, pairs
+      Similarity.kMeans(emb, 4, 2)._2,
+      TextAnalysis.bpe(docs, 3)._1,
+      Curation.incrementalSemanticDedup(emb.filter(ue >= 0.25), emb.filter(ue < 0.25)),
+      graft.ops.Kmv.sketchesOf(docs, 16),
+      SparkEntry.queries("r02_monthly_revenue_trend")(spark, Sf)
+    ).foreach(_.count())
+    assert(Ckpt.memoOwners(spark) === memoFamilies)
+
+    Ckpt.clearAll(spark)
+    assert(Ckpt.memoOwners(spark).isEmpty)
+    assert((Ckpt.registeredOwners(spark) & memoFamilies).isEmpty)
+    assert(org.apache.spark.sql.CachedEntries(spark) === baseline,
+      "a memo build left a cached frame clearAll does not reach")
+    assert(view.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+      "View.dw must stay cached")
   }
 
   test("Similarity.kMeans labels held across clearCaches recompute identically") {

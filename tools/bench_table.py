@@ -50,7 +50,7 @@ outside -> regression candidate; a DISAGREEMENT is resolved by the
 magnitude-matched normalization — in EITHER direction — only when its
 canary's own factor series is TIGHT (>= 3 readings, max/min <= 2, a
 consistent band rather than one noisy reading); a disagreement under a
-noisy matched series is AMBIGUOUS and goes to QueryProbe.
+noisy matched series is AMBIGUOUS and goes to graft.Probe time.
 
 Round 15 staleness policy (round-14 verdict directive): committed rows
 are historical-best minima under the merge-lower ratchet, and four
@@ -187,7 +187,7 @@ def merge_lower(b: dict, old_path: str, new_rows: list) -> None:
     # sessions read it ~1x and the old streak must not linger into a
     # spurious cascade, and (b) --movers can tell a current-era row (a
     # credible GENUINE flag) from a golden-era row (an instrument gap:
-    # QueryProbe + reprice, never a streak wait) when a canary in its
+    # graft.Probe time + reprice, never a streak wait) when a canary in its
     # magnitude class stops measuring the band after its own rebase.
     # NOTE this makes --merge-lower STATEFUL: render only tables you
     # intend to commit. Re-rendering the SAME bench.json is idempotent
@@ -513,15 +513,15 @@ def movers_report(b: dict, baseline_path: str, ratio_gate: float = 2.0,
                     verdict = (f"GENUINE REGRESSION CANDIDATE: the tight "
                                f"magnitude-matched canary "
                                f"({mc.split('_')[0]}) stays outside the "
-                               "gate — adjudicate with QueryProbe")
+                               "gate — adjudicate with graft.Probe time")
             elif in_n != in_m:
                 verdict = ("AMBIGUOUS: normalizations disagree (matched "
                            "canary series noisy) — adjudicate with "
-                           "QueryProbe before moving the row")
+                           "graft.Probe time before moving the row")
             elif 2 * n_slow > len(ss):
                 verdict = ("GENUINE REGRESSION CANDIDATE: majority of "
                            "samples slow even after host-factor "
-                           "normalization — adjudicate with QueryProbe")
+                           "normalization — adjudicate with graft.Probe time")
             else:
                 verdict = ("artifact-exonerable: median poisoned by a "
                            "minority window (should not happen under "
@@ -532,7 +532,7 @@ def movers_report(b: dict, baseline_path: str, ratio_gate: float = 2.0,
                 # was itself repriced reads ~1x by construction and can
                 # no longer measure the band for GOLDEN-ERA committed
                 # rows in its magnitude class — such a flag is an
-                # instrument gap (QueryProbe + reprice at adjudication,
+                # instrument gap (graft.Probe time + reprice at adjudication,
                 # never a streak wait). A flag on a row whose own
                 # committed value is current-host-priced has no such
                 # excuse and is credible as filed.
@@ -545,7 +545,7 @@ def movers_report(b: dict, baseline_path: str, ratio_gate: float = 2.0,
                                 f"repriced {repriced[mc]['t']} and reads "
                                 "~1x by construction; this row's committed "
                                 "value predates that reprice — likely an "
-                                "instrument gap: QueryProbe, then reprice "
+                                "instrument gap: graft.Probe time, then reprice "
                                 "per the round-17 rule")
             print(f"| {name} | {base:.3f} | {m:.3f} | {m / base:.1f}x | "
                   f"{nr:.1f}x | {mcell} | {n_slow}/{len(ss)} | {verdict} |")
