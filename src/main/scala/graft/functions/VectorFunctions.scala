@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -114,14 +115,20 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 
 object VectorFunctions {
 
-  /** Register graft's vector functions on a session (idempotent). The
+  /** Register graft's vector functions on a session that lacks them. The
     * public Column API can't wrap a raw Expression in Spark 4
     * (ExpressionUtils is private[sql]), so exposure goes through the
-    * function registry + call_function.
+    * function registry + call_function. A session built with
+    * GraftExtensions already has `dot_product`; replacing it would be a
+    * registry write and a WARN line per call, so a present function is
+    * left as it is.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier("dot_product")))
+      registry.createOrReplaceTempFunction(
+        "dot_product", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+  }
 
   /** dot_product as a Column. Registers on the active session first
     * (idempotent, cheap) so callers can use it standalone; analysis

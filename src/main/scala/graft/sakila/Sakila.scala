@@ -1,5 +1,6 @@
 package graft.sakila
 
+import graft.io.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +27,7 @@ import org.apache.spark.sql.functions._
   *     engines for these positive values.
   */
 final case class SakilaTables(spark: SparkSession, dir: String) {
-  private def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  private def t(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
   def customer: DataFrame = t("customer")
   def address: DataFrame = t("address")
   def city: DataFrame = t("city")

@@ -114,7 +114,13 @@ class CachesSpec extends SparkSuite {
     assert((Ckpt.registeredOwners(spark) & memoFamilies).isEmpty)
     assert(org.apache.spark.sql.CachedEntries(spark) === baseline,
       "a memo build left a cached frame clearAll does not reach")
-    assert(view.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+    // The served frame may be a coalesce(1) over the cache entry, so the
+    // check reads the entry itself: a fresh plan over the view must still
+    // find the cached relation, with its blocks loaded.
+    val cached = view.select("*").queryExecution.withCachedData.collectFirst {
+      case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+    }
+    assert(cached.exists(_.cacheBuilder.isCachedColumnBuffersLoaded),
       "View.dw must stay cached")
   }
 

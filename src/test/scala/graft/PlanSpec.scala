@@ -135,6 +135,63 @@ class PlanSpec extends SparkSuite {
       "geo dimension chain should broadcast, not shuffle")
   }
 
+  /** Exchanges in a query's final plan, the view's cached subtree aside:
+    * a cached scan's plan is an inner child, which this walk skips. */
+  private def exchangesOutsideCache(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case e: Exchange => e.nodeName
+      case r: ReusedExchangeExec => r.nodeName
+    }
+  }
+
+  private val CachedPlanMayChange =
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true"
+
+  private def q09Rows(dir: String) = queries.Registry.queryMap("q09_revenue_by_nation")(spark, dir)
+    .collect().toSeq
+
+  test("q01-q11 over a one-partition View.dw run as one job each, with no exchange above the view") {
+    import graft.warehouse.View
+    val dir = copyOfTables(Sf)
+    withConf(CachedPlanMayChange) {
+      assert(View.cachedPartitions(View.dw(spark, dir)) === Some(1))
+      assert(queries.Warehouse.defs.size === 11)
+      for (q <- queries.Warehouse.defs) {
+        val df = q.fn(spark, dir)
+        assert(jobsOf(df.collect()) === 1, s"${q.name} ran more than one job")
+        val exchanges = exchangesOutsideCache(df)
+        assert(exchanges.isEmpty, s"${q.name} plans exchanges above the view: $exchanges")
+      }
+    }
+  }
+
+  test("a View.dw cache AQE leaves in several partitions is served unwrapped, with the same rows") {
+    import graft.warehouse.View
+    val onePartition = withConf(CachedPlanMayChange) {
+      val dir = copyOfTables(Sf)
+      assert(View.cachedPartitions(View.dw(spark, dir)) === Some(1))
+      q09Rows(dir)
+    }
+    val dir = copyOfTables(Sf)
+    // At sf0.001 AQE broadcasts every fact join, and the view's last stage
+    // is the one-split customer scan. Without broadcasts its last stage
+    // reads a custkey shuffle, which AQE coalesces to its target size;
+    // parallelismFirst (the default) floors that target at
+    // minPartitionSize (1 MB), so both sizes are lowered.
+    withConf(CachedPlanMayChange,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1") {
+      val dw = View.dw(spark, dir)
+      assert(View.cachedPartitions(dw).exists(_ > 1))
+      // Unwrapped: the served frame is the cache entry itself.
+      assert(dw.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    }
+    assert(q09Rows(dir) === onePartition)
+  }
+
   test("x53/x54 sparse ANN candidate join stays an equi-join on (band_idx, band_key)") {
     for (name <- Seq("x53_ann_pairs_sparse", "x54_ann_topk_sparse")) {
       val plan = executed(name)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,4 +19,40 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val Sf = "/root/testdata/sf0.001"
+
+  /** Number of Spark jobs started while `body` runs. */
+  def jobsOf(body: => Any): Int = {
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try { body; ListenerDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  /** Runs `body` with the given SQL confs set, then restores them. */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val before = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** A fresh copy of the parquet tables under `dir`: a path no earlier
+    * test opened, so per-path caches (Tables' schemas, View.dw) start
+    * empty for it. */
+  def copyOfTables(dir: String): String = {
+    val to = java.nio.file.Files.createTempDirectory("graft-tables-copy")
+    val from = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(from)
+    try walk.forEach { p =>
+      val dest = to.resolve(from.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dest)
+      else java.nio.file.Files.copy(p, dest)
+    } finally walk.close()
+    to.toString
+  }
 }
