@@ -1,5 +1,6 @@
 package graft
 
+import graft.obs.JobStats
 import graft.queries.Registry
 import graft.warehouse.View
 
@@ -58,17 +59,13 @@ import graft.warehouse.View
   *     wall-clock windows (cold sweep, sweep 1, sweep 2, each minutes
   *     apart), so any single contention window can poison at most one
   *     sweep's sample(s) per query — a minority of every 3- or 5-sample
-  *     median. Movers are auto-exonerable from the "samples" series
-  *     alone (tools/bench_table.py --movers).
-  *   - SELF-EXONERATION (round-13 directive): bench.json additionally
-  *     carries (a) "queries_min" — each query's MIN across all samples,
-  *     the standing lower-run policy machine-readable — and (b)
-  *     "canaries" — interleaved readings of [[CanaryNames]] at fixed
-  *     slot offsets across all three sweeps, whose reading/committed
-  *     ratios measure the session's host factor as a TIME SERIES.
-  *     tools/bench_table.py --movers normalizes every mover by the
-  *     nearest canary readings, so "contention vs regression" is
-  *     decidable from the artifact alone.
+  *     median.
+  *   - every rerun is counted by a [[JobStats]] collector, and bench.json
+  *     (file only) carries each query's "structure": one
+  *     [jobs, stages, tasks, task_s] entry per rerun, in rerun order.
+  *     Wall-clock on a shared host cannot tell contention from a
+  *     regression; a changed structure is a changed program, so
+  *     tools/bench_table.py --movers routes each mover by it.
   *   - results are materialized through the noop sink: count() lets
   *     Catalyst drop sorts/projections, under-measuring ORDER BY queries;
   *     noop forces the full physical plan
@@ -93,29 +90,6 @@ object Bench {
     * x21/s06); 5 samples of a fast query are cheap by definition. */
   val FiveRunThresholdSec = 2.0
 
-  /** Pinned canary queries (round-13 directive #1): unchanged-forever
-    * code, deliberately memo-cache-FREE (q01 reads the session-warm
-    * view — the by-design S3 exception its committed median also
-    * reads; x05 and x83 are pure computation over documents/events),
-    * so an interleaved rerun needs no cache clearing and perturbs no
-    * sibling's memo-warm cold. Each canary reading divided by that
-    * canary's committed median is a direct measurement of the
-    * SESSION'S HOST FACTOR at that instant: two consecutive driver
-    * sessions ran degraded (r12 1.26x, r13 1.4-2x sessionwide) and the
-    * 2x-bar adjudication needed manual per-sample forensics plus
-    * judge-run isolated probes — the canary series makes a degraded
-    * host provable (and movers normalizable) from the artifact alone
-    * (`tools/bench_table.py --movers`). Three diverse shapes: a
-    * dim-broadcast join+agg, a hash window over documents, a
-    * sessionization window over events. */
-  val CanaryNames: Seq[String] =
-    Seq("q01_revenue_summary", "x05_dedup_exact", "x83_session_windows")
-
-  /** One canary fires every this-many slots (rotating through
-    * [[CanaryNames]]), in every sweep — ~7 firings per sweep over the
-    * ~250-query set, so each canary lands ~7 readings spread across the
-    * session's full wall-clock at ~0.3-0.6 s committed cost each. */
-  val CanaryEverySlots = 40
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session()
@@ -146,63 +120,15 @@ object Bench {
     // Rerun timing for the median series: a rerun failure must NOT mark a
     // cold-successful query as failed in the headline (nor enter it twice),
     // so reruns record nothing — they only contribute a sample or don't.
-    def timeQuiet(name: String): Double = {
-      // Memo-cold rerun (see methodology scaladoc); clearing costs
-      // only unpersist calls.
-      graft.ops.Ckpt.clearAll(spark)
-      try timed(Registry.queryMap(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save())
+    def timeQuiet(name: String): Double =
+      try Probe.run(spark, name, sfDir)
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name rerun failed (median falls back): ${e.getMessage}")
         -1.0
       }
-    }
-
-    def stamped(run: => Double): (Double, Double) = {
-      val ts = System.currentTimeMillis() / 1000.0
-      (ts, run)
-    }
-
-    // Canary readings: NO cache clearing (the canaries are memo-free by
-    // selection, so there is nothing to clear and the cold sweep's
-    // memo-warm sibling semantics stay undisturbed), failures record a
-    // -1 sample the factor tool skips without touching the headline.
-    val canarySamples = scala.collection.mutable.LinkedHashMap(
-      CanaryNames.map(_ -> Vector.empty[(Double, Double)]): _*)
-    def timeCanary(name: String): Unit = {
-      val ts = System.currentTimeMillis() / 1000.0
-      val t =
-        try timed(Registry.queryMap(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save())
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] canary $name failed: ${e.getMessage}")
-          -1.0
-        }
-      canarySamples(name) = canarySamples(name) :+ ((ts, t))
-    }
-    // Global slot counter across ALL sweeps so firing offsets are fixed
-    // and the readings tile the whole session, not each sweep's start.
-    var slot = 0
-    def canaryTick(): Unit = {
-      if (slot % CanaryEverySlots == 0)
-        timeCanary(CanaryNames((slot / CanaryEverySlots) % CanaryNames.size))
-      slot += 1
-    }
 
     // Warmup: build + cache the view (counts as engine cost, reported).
     val warmup = timed { View.dw(spark, sfDir).count() }
-
-    // Warm each canary's codegen once, UNMEASURED, so every measured
-    // canary reading is steady-state from the first tick (a JVM-cold
-    // first reading would distort the factor series exactly where r13's
-    // first-sweep poisoning lived). Side effect: the canaries' own cold
-    // rows in the regular series are codegen-warm from round 14 on —
-    // deliberate, noted in BASELINE_BENCH.md.
-    CanaryNames.foreach { n =>
-      try Registry.queryMap(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
 
     // Local-iteration filter (the driver never sets it): restrict the
     // headline set to comma-separated name prefixes, e.g.
@@ -211,9 +137,8 @@ object Bench {
     val names = Registry.benchSet.map(_.name)
       .filter(n => only.forall(_.exists(n.startsWith))).sorted
 
-    // Sweep 0: every query's cold run, in slot order, canaries
-    // interleaved at fixed offsets.
-    val colds = names.map { n => canaryTick(); n -> stamped(materialize(n, sfDir)) }
+    // Sweep 0: every query's cold run, in slot order.
+    val colds = names.map(n => n -> materialize(n, sfDir))
 
     // Sweeps 1 and 2: one rerun per slow query, two per fast query,
     // again in slot order over the WHOLE set — so the sweeps land in
@@ -224,48 +149,25 @@ object Bench {
     // NO query gets a single sample (round-9 directive). If any rerun
     // fails, the median falls back to cold (an even-sample "median"
     // would just pick an arbitrary one).
-    def rerunSweep(): Map[String, Seq[(Double, Double)]] =
-      colds.collect { case (n, (_, c)) if c >= 0 =>
-        canaryTick()
+    val stats = new JobStats(spark.sparkContext)
+    def rerunSweep(): Map[String, Seq[(Double, JobStats.Counts)]] =
+      colds.collect { case (n, c) if c >= 0 =>
         val perSweep = if (c < FiveRunThresholdSec) 2 else 1
-        n -> Seq.fill(perSweep)(stamped(timeQuiet(n)))
+        n -> Seq.fill(perSweep)((stats.measure(n)(timeQuiet(n)), stats.counts(n)))
       }.toMap
     val sweep1 = rerunSweep()
     val sweep2 = rerunSweep()
-    // One final full canary round at the session's very end, so the
-    // factor series brackets every sample.
-    CanaryNames.foreach(timeCanary)
+    stats.close()
 
-    // Each sample is recorded as [start_epoch_sec, duration_sec] into
-    // bench.json's "samples" map (round-10 verdict directive), in
-    // chronological order: cold first, then sweep-1, then sweep-2
-    // reruns. With per-sample timestamps AND the sweep separation, a
-    // host-contention episode is both provable and EXONERABLE from the
-    // artifact alone — slow samples cluster in one time band while the
-    // same queries' other-sweep samples sit in-band.
-    val measured = colds.map { case (n, (ts, cold)) =>
-      if (cold < 0) (n, cold, cold, Seq((ts, cold)))
-      else {
-        val reruns = sweep1(n) ++ sweep2(n)
-        val samples = (ts, cold) +: reruns
-        val med =
-          if (reruns.exists(_._2 < 0)) cold
-          else { val all = (cold +: reruns.map(_._2)).sorted; all(all.size / 2) }
-        (n, cold, med, samples)
-      }
+    // Per query, its reruns' (seconds, structure) in rerun order.
+    val reruns = colds.map { case (n, _) =>
+      n -> (sweep1.getOrElse(n, Nil) ++ sweep2.getOrElse(n, Nil))
     }
-    val results = measured.map { case (n, cold, _, _) => n -> cold }
-    val medians = measured.map { case (n, _, med, _) => n -> med }
-    val samples = measured.map { case (n, _, _, s) => n -> s }
-    // Per-query MIN across all samples — the standing "treat the LOWER
-    // same-code run as the code's cost" policy, machine-readable
-    // (round-13 directive #1): on a degraded host the min is the
-    // closest in-artifact estimate of the undegraded cost.
-    val mins = measured.map { case (n, _, _, s) =>
-      val ok = s.map(_._2).filter(_ >= 0)
-      n -> (if (ok.isEmpty) -1.0 else ok.min)
+    val medians = colds.zip(reruns).map { case ((n, cold), (_, rs)) =>
+      if (cold < 0 || rs.exists(_._1 < 0)) n -> cold
+      else { val all = (cold +: rs.map(_._1)).sorted; n -> all(all.size / 2) }
     }
-    val total = warmup + results.collect { case (_, t) if t >= 0 => t }.sum
+    val total = warmup + colds.collect { case (_, t) if t >= 0 => t }.sum
     val medianTotal = warmup + medians.collect { case (_, t) if t >= 0 => t }.sum
 
     // Layout demo (excluded from total — see scaladoc). A stale managed-
@@ -340,8 +242,8 @@ object Bench {
     // Locale.ROOT formatting for EVERYTHING machine-parsed: the f
     // interpolator uses the JVM default locale, so a de/fr host would
     // render "1,234" and silently break bench.json's parser.
-    def num(v: Double, decimals: Int = 3): String =
-      String.format(java.util.Locale.ROOT, s"%.${decimals}f", Double.box(v))
+    def num(v: Double): String =
+      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def timesJson(ts: Seq[(String, Double)]): String =
       ts.map { case (k, v) => "\"" + k + "\":" + num(v) }.mkString("{", ",", "}")
 
@@ -383,25 +285,18 @@ object Bench {
       java.nio.file.Paths.get("bench_diag.json"), j + "\n"))
 
     val failedJson = headlineFailed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Per-sample [start_epoch_sec, dur_sec] series — file-only (bench.json
-    // is the canonical machine-readable artifact; stdout stays short for
-    // the driver's tail capture). This is what makes a host-contention
-    // window provable from the artifact instead of costing a rerun session.
-    val samplesJson = samples.map { case (n, ss) =>
-      "\"" + n + "\":" + ss.map { case (ts, d) => s"[${num(ts, 1)},${num(d)}]" }
-        .mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    // Canary series, same [start_epoch_sec, dur_sec] encoding as samples
-    // — file-only, consumed by tools/bench_table.py --movers as the
-    // session host-factor measurement.
-    val canariesJson = canarySamples.map { case (n, ss) =>
-      "\"" + n + "\":" + ss.map { case (ts, d) => s"[${num(ts, 1)},${num(d)}]" }
-        .mkString("[", ",", "]")
+    // The run's core count and per-rerun [jobs, stages, tasks, task_s] —
+    // file-only (bench.json is the canonical machine-readable artifact;
+    // stdout stays short for the driver's tail capture).
+    val structureJson = reruns.filter(_._2.nonEmpty).map { case (n, rs) =>
+      "\"" + n + "\":" + rs.map { case (_, c) =>
+        s"[${c.jobs},${c.stages},${c.tasks},${num(c.taskMs / 1e3)}]"
+      }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${timesJson(("_warmup" -> warmup) +: (results ++ layoutTimes))},"median_total":${num(medianTotal)},"queries_median":${timesJson(medians)},"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${timesJson(("_warmup" -> warmup) +: (colds ++ layoutTimes))},"median_total":${num(medianTotal)},"queries_median":${timesJson(medians)},"failed":$failedJson,"sf":"$sfDir"}"""
     val fileJson = json.dropRight(1) +
-      s""","queries_min":${timesJson(mins)},"canaries":$canariesJson,"samples":$samplesJson}"""
+      s""","cores":${spark.sparkContext.defaultParallelism},"structure":$structureJson}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), fileJson + "\n")
     spark.stop()
     // Printed after spark.stop() so no executor/log line can interleave.

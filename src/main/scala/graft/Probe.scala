@@ -1,7 +1,8 @@
 package graft
 
+import graft.obs.JobStats
 import graft.queries.Registry
-import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
 
 /** Per-query inspection in Bench's session (see [[Session]]):
   *
@@ -15,7 +16,7 @@ import org.apache.spark.scheduler._
   *    behind BASELINE_BENCH's ">= 3-rep isolated adjudication" policy:
   *    an adjudication only means something if it measures the same
   *    quantity as the committed median it adjudicates.
-  *  - `stages`: the same reps with a SparkListener attached, printing
+  *  - `stages`: the same reps counted by a [[JobStats]] collector, printing
   *    per-job wall-clock, stage count, task count and summed task time —
   *    the local[N] stand-in for the Spark UI's Jobs/Stages pages (the UI
   *    is off in every measured session). This distinguishes "the seconds
@@ -52,24 +53,20 @@ object Probe {
     }
 
     val spark = Session()
-    // Every rep is memo-cold, as Bench's reruns are.
-    def run(name: String): Double = {
-      ops.Ckpt.clearAll(spark)
-      val t0 = System.nanoTime()
-      Registry.queryMap(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     mode match {
       case "time" => names.foreach { name =>
-        val times = (1 to reps).map(_ => run(name))
+        val times = (1 to reps).map(_ => run(spark, name, dir))
         val med = times.sorted.apply(times.size / 2)
         println(f"[qprobe] $name: ${times.map(t => f"$t%.2f").mkString(" ")}" +
           f" -> median $med%.2f s")
       }
-      case "stages" => names.foreach { name =>
-        (1 to reps).foreach(rep => stageRep(spark, name, rep, rep == reps)(run(name)))
-      }
+      case "stages" =>
+        val stats = new JobStats(spark.sparkContext)
+        for (name <- names; rep <- 1 to reps) {
+          val wall = stats.measure(name)(run(spark, name, dir))
+          printStages(stats, name, rep, wall, rep == reps)
+        }
+        stats.close()
       case "plan" =>
         (if (names.isEmpty) Registry.benchSet.map(_.name) else names).foreach { n =>
           println(s"\n===== $n =====")
@@ -79,55 +76,32 @@ object Probe {
     spark.stop()
   }
 
-  // Collected per job: submit/complete times, #stages, #tasks and the sum
-  // of task runtimes (ms).
-  private case class JobRec(id: Int, t0: Long, stages: Int, var t1: Long = 0L,
-    var tasks: Int = 0, var taskMs: Long = 0L)
-  private case class StageRec(id: Int, name: String, var tasks: Int = 0,
-    var taskMs: Long = 0L)
+  /** One memo-cold run of a registered query through the noop sink, in
+    * seconds: every memo cache is cleared first, as Bench's reruns clear
+    * them. */
+  def run(spark: SparkSession, name: String, dir: String): Double = {
+    ops.Ckpt.clearAll(spark)
+    val t0 = System.nanoTime()
+    Registry.queryMap(name)(spark, dir)
+      .write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
 
-  /** One rep of `body` under a job/stage listener; prints the rep's
-    * totals, and per-job and top-12 per-stage rows when `detail`. */
-  private def stageRep(spark: org.apache.spark.sql.SparkSession, name: String,
-      rep: Int, detail: Boolean)(body: => Double): Unit = {
-    val jobs = scala.collection.concurrent.TrieMap.empty[Int, JobRec]
-    val stages = scala.collection.concurrent.TrieMap.empty[Int, StageRec]
-    val stageToJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
-        jobs(e.jobId) = JobRec(e.jobId, e.time, e.stageIds.size)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.t1 = e.time)
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages(e.stageInfo.stageId) =
-          StageRec(e.stageInfo.stageId, e.stageInfo.name.takeWhile(_ != '\n'))
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val ms = if (e.taskInfo != null) e.taskInfo.duration else 0L
-        jobs.get(stageToJob.getOrElse(e.stageId, -1)).foreach { r =>
-          r.tasks += 1; r.taskMs += ms
-        }
-        stages.get(e.stageId).foreach { s => s.tasks += 1; s.taskMs += ms }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val wall = body
-    // Let straggler listener events drain before reading the maps.
-    Thread.sleep(300)
-    spark.sparkContext.removeSparkListener(listener)
-    val rows = jobs.values.toSeq.sortBy(_.id)
-    val jobWall = rows.map(r => (r.t1 - r.t0).max(0L)).sum / 1e3
+  /** Prints one rep's totals, and per-job and top-12 per-stage rows when
+    * `detail`. */
+  private def printStages(stats: JobStats, name: String, rep: Int, wall: Double,
+      detail: Boolean): Unit = {
+    val jobs = stats.jobs(name)
+    val c = stats.counts(name)
     println(f"[sprobe] $name rep$rep wall=$wall%.2f s, " +
-      f"${rows.size} jobs (Σjob ${jobWall}%.2f s), " +
-      f"${rows.map(_.stages).sum} stages, ${rows.map(_.tasks).sum} tasks, " +
-      f"Σtask ${rows.map(_.taskMs).sum / 1e3}%.2f s")
+      f"${c.jobs} jobs (Σjob ${jobs.map(_.wallMs).sum / 1e3}%.2f s), " +
+      f"${c.stages} stages, ${c.tasks} tasks, Σtask ${c.taskMs / 1e3}%.2f s")
     if (detail) {
-      rows.foreach { r =>
-        println(f"[sprobe]   job ${r.id}%3d ${(r.t1 - r.t0).max(0L) / 1e3}%6.2f s " +
-          f"${r.stages}%3d stages ${r.tasks}%4d tasks Σtask ${r.taskMs / 1e3}%7.2f s")
+      jobs.sortBy(_.id).foreach { j =>
+        println(f"[sprobe]   job ${j.id}%3d ${j.wallMs / 1e3}%6.2f s " +
+          f"${j.stages}%3d stages ${j.tasks}%4d tasks Σtask ${j.taskMs / 1e3}%7.2f s")
       }
-      stages.values.toSeq.sortBy(-_.taskMs).take(12).foreach { s =>
+      stats.stages(name).sortBy(-_.taskMs).take(12).foreach { s =>
         println(f"[sprobe]   stage ${s.id}%4d ${s.tasks}%4d tasks " +
           f"Σtask ${s.taskMs / 1e3}%7.2f s  ${s.name}%s")
       }

@@ -226,7 +226,6 @@ object ScaleProbe {
     "x100_mutual_knn", "x123_community_modularity", "x137_bfs_distances")
 
   def main(args: Array[String]): Unit = {
-    val spark = Session()
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.lift(1).map(_.toInt).getOrElse(10)
     // Corpus-only queries (they read documents.parquet and nothing else),
@@ -266,6 +265,9 @@ object ScaleProbe {
     val eventProbes = selected(eventProbeNames)
     val graphProbes = selected(graphProbeNames)
     val factProbes = selected(factProbeNames)
+    val all = probes ++ embProbes ++ eventProbes ++ graphProbes ++ factProbes
+    require(all.nonEmpty, s"no probe query matches ${only.get.mkString(",")}")
+    val spark = Session()
 
     // Replica re-key stride: 1L<<40 puts every replica's id range far
     // above any real id (the generator's ids are dense from 0), so
@@ -286,79 +288,39 @@ object ScaleProbe {
       s"${System.getProperty("java.io.tmpdir")}/graft-scaleprobe-x$mult-$baseKey"
     val localFs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
+    // (table, the id column each replica re-keys, the probes reading it).
+    // Events replicas keep user_id (and ts), so the duplication pressure
+    // lands on the per-user windows and as-of range probes; both fact
+    // tables shift orderkey by the same stride, so each replica joins
+    // within itself — the key domain grows N×, per-key counts stay
+    // constant.
     Seq(
-      "documents" -> probes.nonEmpty,
-      "embeddings" -> (embProbes.nonEmpty || graphProbes.nonEmpty),
-      "events" -> eventProbes.nonEmpty,
-      "lineitem" -> factProbes.nonEmpty,
-      "orders" -> factProbes.nonEmpty
-    ).collect { case (t, written) if !written =>
-      localFs.delete(new org.apache.hadoop.fs.Path(s"$dupDir/$t.parquet"), true)
-    }
-    if (probes.nonEmpty) {
-      val docs = io.Tables(spark, base).documents
-      (0 until mult)
-        .map(i => docs.withColumn("doc_id", col("doc_id") + lit(i.toLong * stride)))
-        .reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$dupDir/documents.parquet")
-    }
-    if (embProbes.nonEmpty || graphProbes.nonEmpty) {
-      val embs = io.Tables(spark, base).embeddings
-      (0 until mult)
-        .map(i => embs.withColumn("vec_id", col("vec_id") + lit(i.toLong * stride)))
-        .reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$dupDir/embeddings.parquet")
-    }
-    // Events: replicas RE-KEY event_id but KEEP user_id (and ts), so the
-    // duplication pressure lands on the per-user windows and as-of range
-    // probes rather than diluting across synthetic users.
-    if (eventProbes.nonEmpty) {
-      val evs = io.Tables(spark, base).events
-      (0 until mult)
-        .map(i => evs.withColumn("event_id", col("event_id") + lit(i.toLong * stride)))
-        .reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$dupDir/events.parquet")
+      ("documents", "doc_id", probes),
+      ("embeddings", "vec_id", embProbes ++ graphProbes),
+      ("events", "event_id", eventProbes),
+      ("lineitem", "l_orderkey", factProbes),
+      ("orders", "o_orderkey", factProbes)
+    ).foreach { case (table, id, readers) =>
+      val out = s"$dupDir/$table.parquet"
+      if (readers.isEmpty) localFs.delete(new org.apache.hadoop.fs.Path(out), true)
+      else {
+        val rows = io.Tables.read(spark, s"$base/$table.parquet")
+        (0 until mult)
+          .map(i => rows.withColumn(id, col(id) + lit(i.toLong * stride)))
+          .reduce(_ unionByName _)
+          .repartition(32)
+          .write.mode("overwrite").parquet(out)
+      }
     }
 
-    // Fact tables: BOTH sides' orderkey shifts by the same replica
-    // stride, so each replica joins within itself — the key domain
-    // grows N×, per-key counts stay constant.
-    if (factProbes.nonEmpty) {
-      val li = io.Tables(spark, base).lineitem
-      (0 until mult)
-        .map(i => li.withColumn("l_orderkey",
-          col("l_orderkey") + lit(i.toLong * stride)))
-        .reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$dupDir/lineitem.parquet")
-      val ord = io.Tables(spark, base).orders
-      (0 until mult)
-        .map(i => ord.withColumn("o_orderkey",
-          col("o_orderkey") + lit(i.toLong * stride)))
-        .reduce(_ unionByName _)
-        .repartition(32)
-        .write.mode("overwrite").parquet(s"$dupDir/orders.parquet")
-    }
-
-    def timeQ(name: String, dir: String): Double = {
-      graft.ops.Ckpt.clearAll(spark)
-      val t0 = System.nanoTime()
-      queries.Registry.queryMap(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     // Median of 3 after one discarded warm-up rep: at these corpus sizes a
     // single cold rep is dominated by codegen/JIT warm-up, which would
     // understate the 1x time and bias the exponent toward zero.
     def medQ(name: String, dir: String): Double = {
-      timeQ(name, dir)
-      Seq.fill(3)(timeQ(name, dir)).sorted.apply(1)
+      Probe.run(spark, name, dir)
+      Seq.fill(3)(Probe.run(spark, name, dir)).sorted.apply(1)
     }
-    (probes ++ embProbes ++ eventProbes ++ graphProbes ++ factProbes)
-      .foreach { q =>
+    all.foreach { q =>
       val t1 = medQ(q, base)
       val tN = medQ(q, dupDir)
       val exp = math.log(tN / t1) / math.log(mult.toDouble)

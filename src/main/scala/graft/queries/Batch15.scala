@@ -44,7 +44,7 @@ object Batch15 {
   private[queries] val DiffCols =
     Seq("doc_id", "source", "lang", "n_chars", "text")
 
-  def defs: Seq[QueryDef] = Seq(
+  lazy val defs: Seq[QueryDef] = Seq(
 
     // Row-level reconciliation drill-down (Reconcile.rowDiff): the step
     // after x239's bucket_match=false — semi-join both sides on the

@@ -23,7 +23,7 @@ object Batch16 {
 
   private val PriceCols = Seq("l_orderkey", "l_linenumber", "price_fp")
 
-  def defs: Seq[QueryDef] = Seq(
+  lazy val defs: Seq[QueryDef] = Seq(
 
     // Fixed-point fingerprint of a DOUBLE column (Reconcile.fixedPoint
     // + tableChecksum): lineitem's l_extendedprice IS a double in this

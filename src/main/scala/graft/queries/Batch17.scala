@@ -49,7 +49,7 @@ object Batch17 {
       |  FROM documents
       |)""".stripMargin
 
-  def defs: Seq[QueryDef] = Seq(
+  lazy val defs: Seq[QueryDef] = Seq(
 
     // Changelog roundtrip (Reconcile.changelog + applyChangelog): the
     // keyed twin of x244's multiset repair. The corrupted copy's

@@ -5,14 +5,14 @@ package graft.queries
   * the driver's CORRECTNESS report is keyed by them.
   */
 object Registry {
-  def all: Seq[QueryDef] =
+  lazy val all: Seq[QueryDef] =
     Warehouse.defs ++ Report.defs ++ Service.defs ++ Procs.defs ++ Extensions.defs ++ Advanced.defs ++ Frontier.defs ++ Batch13.defs ++ Batch14.defs ++ Batch15.defs ++ Batch16.defs ++ Batch17.defs
 
-  def queryMap: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
+  lazy val queryMap: Map[String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame] =
     all.map(q => q.name -> q.fn).toMap
 
-  def oracleMap: Map[String, String] =
+  lazy val oracleMap: Map[String, String] =
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 
-  def benchSet: Seq[QueryDef] = all.filter(_.bench)
+  lazy val benchSet: Seq[QueryDef] = all.filter(_.bench)
 }

@@ -23,6 +23,13 @@ class RegistrySpec extends SparkSuite {
     }
   }
 
+  test("the registry is built once: repeated lookups return the same instances") {
+    assert(Registry.all eq Registry.all)
+    assert(Registry.queryMap eq Registry.queryMap)
+    assert(Registry.oracleMap eq Registry.oracleMap)
+    assert(Registry.benchSet eq Registry.benchSet)
+  }
+
   test("the scale probe's query list resolves against the registry") {
     // References ScaleProbe's OWN constants (round-9 advice): a probe
     // list edit is guarded automatically instead of via a stale copy.

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.obs.JobStats
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,15 +19,9 @@ trait SparkSuite extends AnyFunSuite {
 
   /** Number of Spark jobs started while `body` runs. */
   def jobsOf(body: => Any): Int = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; ListenerDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
+    val stats = new JobStats(spark.sparkContext)
+    try { stats.measure("body")(body); stats.counts("body").jobs }
+    finally stats.close()
   }
 
   /** Runs `body` with the given SQL confs set, then restores them. */
