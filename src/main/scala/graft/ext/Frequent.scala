@@ -280,10 +280,7 @@ object Frequent {
       .groupBy("j").agg(sum(col("s")).as("s_merged"))
     val corpusCounts = shardCounts.groupBy("tok").agg(sum(col("c")).as("c"))
     val direct = amsCounters(corpusCounts)
-    val mm = merged.join(direct, Seq("j"), "full_outer")
-      .agg(coalesce(sum(when(col("s_merged").isNull || col("s").isNull
-        || col("s_merged") =!= col("s"), lit(1L)).otherwise(lit(0L))), lit(0L))
-        .as("n_mismatch"))
+    val mm = graft.ops.Sharding.mergeMismatches(merged, direct, Seq("j"), "s_merged", "s")
     val est = amsEstimate(merged.select(col("j"), col("s_merged").as("s")))
     val exact = corpusCounts.agg(sum(col("c") * col("c")).as("f2_exact"))
     exact.crossJoin(broadcast(mm)).crossJoin(broadcast(est))

@@ -967,30 +967,26 @@ object Similarity {
           .select(col("dim_j").as("dim_i"), col("dim_i").as("dim_j"), col("c_fp")))
       .select(col("dim_i").as("i"), col("dim_j").as("j"), col("c_fp"))
       .localCheckpoint() // referenced once per round; truncate the corpus lineage
-    var v = (1 to dim).map(d => (d, if (d == 1) 1000000L else 0L)).toDF("j", "v_fp")
-    // Tracked round states: superseded iterates free as soon as the
-    // next has materialized (the ops/Graph loop discipline); only the
-    // final state outlives the loop, via the returned frame. Round-19:
-    // the MATVEC result checkpoints with its renormalization max
-    // OBSERVED in the same job ([[graft.ops.Ckpt.trackedObserved]]) and
-    // the max folds in as a literal divisor — the old
+    // Round-19: each MATVEC result checkpoints with its renormalization
+    // max OBSERVED in the same job ([[graft.ops.Ckpt.iterate]]) and the
+    // max folds in as a literal divisor — the old
     // crossJoin(broadcast(max)) spelling cost a broadcast-build job per
     // round AND re-evaluated the matvec subtree for it (broadcast builds
     // share nothing). One job per round; identical integer arithmetic.
-    var vH = graft.ops.Ckpt.empty
-    for (_ <- 1 to iterations) {
-      val (w, wH, wm) = graft.ops.Ckpt.trackedObserved(
-        full.join(v, Seq("j"))
-          .groupBy(col("i")).agg(sum(col("c_fp") * col("v_fp")).as("w")),
-        Seq(max(abs(col("w"))).as("m")))
-      vH.release()
-      vH = wH
+    def matvec(v: DataFrame): DataFrame = full.join(v, Seq("j"))
+      .groupBy(col("i")).agg(sum(col("c_fp") * col("v_fp")).as("w"))
+    def renormalized(w: DataFrame, wm: Map[String, Any]): DataFrame = {
       val m = Option(wm("m").asInstanceOf[java.lang.Long])
         .map(_.longValue).getOrElse(0L)
       val divisor = if (m / 1000000L == 0L) 1L else m / 1000000L
-      v = w.select(col("i").as("j"), expr(s"w DIV ${divisor}L").as("v_fp"))
+      w.select(col("i").as("j"), expr(s"w DIV ${divisor}L").as("v_fp"))
     }
-    v.select(col("j").as("dim"), col("v_fp"),
+    val r = graft.ops.Ckpt.iterate(
+        matvec((1 to dim).map(d => (d, if (d == 1) 1000000L else 0L)).toDF("j", "v_fp")),
+        Seq(max(abs(col("w"))).as("m")), iterations - 1) {
+      (w, wm) => matvec(renormalized(w, wm))
+    }
+    renormalized(r.state, r.probes).select(col("j").as("dim"), col("v_fp"),
       (col("v_fp").cast("double") / lit(1000000.0)).as("component"))
   }
 

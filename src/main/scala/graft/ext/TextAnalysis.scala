@@ -1210,10 +1210,8 @@ object TextAnalysis {
       .select(col("c"), cmsCells(col("tok"), depth, width).as("hc"))
       .select(col("hc.h").as("h"), col("hc.cell").as("cell"), col("c"))
       .groupBy("h", "cell").agg(sum(col("c")).as("c_direct"))
-    val mm = merged.join(direct, Seq("h", "cell"), "full_outer")
-      .agg(coalesce(sum(when(col("c_merged").isNull || col("c_direct").isNull
-        || col("c_merged") =!= col("c_direct"), lit(1L)).otherwise(lit(0L))),
-        lit(0L)).as("n_mismatch"))
+    val mm = graft.ops.Sharding.mergeMismatches(merged, direct, Seq("h", "cell"),
+      "c_merged", "c_direct")
     val nTok = corpusCounts.agg(sum(col("c")).as("n_tokens"))
     val mass = merged.groupBy("h").agg(sum(col("c_merged")).as("row_mass"))
       .crossJoin(broadcast(nTok))

@@ -145,10 +145,7 @@ object Bloom {
       .agg(expr("bit_or(word)").as("w_merged"))
     val direct = packed(pos.drop("shard"))
       .withColumnRenamed("word", "w_direct")
-    val mm = merged.join(direct, Seq("widx"), "full_outer")
-      .agg(coalesce(sum(when(col("w_merged").isNull || col("w_direct").isNull
-        || col("w_merged") =!= col("w_direct"), lit(1L)).otherwise(lit(0L))),
-        lit(0L)).as("n_mismatch"))
+    val mm = Sharding.mergeMismatches(merged, direct, Seq("widx"), "w_merged", "w_direct")
     val bits = merged.agg(
       coalesce(sum(expr("bit_count(w_merged)")).cast("long"), lit(0L))
         .as("bits_set"))

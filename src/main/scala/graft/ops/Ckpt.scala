@@ -54,6 +54,15 @@ import scala.jdk.CollectionConverters._
   * no longer read round i's. Direct id capture is per-Dataset, so
   * concurrent `tracked` calls on other threads can never cross-adopt
   * each other's RDDs.
+  *
+  * Loop contract, kept by [[iterate]] for every loop built on it:
+  *  - a round's state is released only after its successor has
+  *    materialized;
+  *  - if a step or the convergence test throws, the live state is
+  *    released and the original exception propagates;
+  *  - the final state's blocks are kept: they back the returned result.
+  *    A caller that checkpoints its own output from the final state may
+  *    release [[Rounds.handle]] afterwards.
   */
 object Ckpt {
 
@@ -266,7 +275,7 @@ object Ckpt {
     * Returns the observed values keyed by metric alias; a metric over
     * zero rows yields null, exactly like the aggregate it replaces.
     */
-  def trackedObserved(df: DataFrame,
+  private[ops] def trackedObserved(df: DataFrame,
       metrics: Seq[org.apache.spark.sql.Column]): (DataFrame, Handle, Map[String, Any]) = {
     require(metrics.nonEmpty, "trackedObserved needs at least one metric")
     val sc = df.sparkSession.sparkContext
@@ -277,5 +286,40 @@ object Ckpt {
       case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
     }.toSet
     (out, new Handle(sc, ids), obs.get)
+  }
+
+  /** The outcome of [[iterate]]: the final state, the probe values
+    * observed while it checkpointed, the number of steps run, and the
+    * handle of the final state's blocks. */
+  final case class Rounds(state: DataFrame, probes: Map[String, Any],
+      rounds: Int, handle: Handle)
+
+  /** The round loop of the iterative operators, under the loop contract
+    * of the object scaladoc. `init` checkpoints with `probes` observed
+    * ([[trackedObserved]]); then up to `maxRounds` times `step` maps the
+    * live state and its probe values to the next frame, which checkpoints
+    * the same way. The loop stops early once `converged(prev, now)` holds
+    * on two successive probe maps. One job per checkpoint. */
+  def iterate(init: DataFrame, probes: Seq[org.apache.spark.sql.Column],
+      maxRounds: Int,
+      converged: (Map[String, Any], Map[String, Any]) => Boolean = (_, _) => false)(
+      step: (DataFrame, Map[String, Any]) => DataFrame): Rounds = {
+    val (s0, h0, m0) = trackedObserved(init, probes)
+    var cur = Rounds(s0, m0, 0, h0)
+    try {
+      var done = false
+      while (!done && cur.rounds < maxRounds) {
+        val (s, h, m) = trackedObserved(step(cur.state, cur.probes), probes)
+        val prev = cur
+        cur = Rounds(s, m, prev.rounds + 1, h)
+        prev.handle.release()
+        done = converged(prev.probes, m)
+      }
+      cur
+    } catch {
+      case t: Throwable =>
+        cur.handle.release()
+        throw t
+    }
   }
 }

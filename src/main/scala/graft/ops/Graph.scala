@@ -205,46 +205,27 @@ object Graph {
     // Overflow-safe fixed-point probe: decimal(38,0) sum of long ids
     // cannot wrap at any realistic vertex count. Round-19: the probe is
     // OBSERVED during each state's own checkpoint job (one job per round
-    // instead of checkpoint + separate aggregate — see
-    // [[Ckpt.trackedObserved]]); a decimal sum merges order-free, so the
-    // early-exit decision is bit-identical to the two-job spelling.
+    // instead of checkpoint + separate aggregate — see [[Ckpt.iterate]]);
+    // a decimal sum merges order-free, so the early-exit decision is
+    // bit-identical to the two-job spelling.
     val probe = sum(col("label").cast("decimal(38,0)")).as("lsum")
     def lsum(m: Map[String, Any]): java.math.BigDecimal =
       m("lsum").asInstanceOf[java.math.BigDecimal]
-    // Empty vertex sets make the observed sum null and the convergence
-    // probe would NPE opaquely mid-round; fail like the sibling ops do.
-    // Tracked checkpoints (see [[Ckpt]]): each round's state releases its
-    // predecessor's blocks as soon as it has materialized, instead of
-    // accumulating one dead round-state per round until a JVM GC.
-    var (label, labelH, m0) = Ckpt.trackedObserved(
-      vertices.select(col("id"), col("id").as("label")), Seq(probe))
-    var sumPrev = lsum(m0)
-    if (sumPrev == null) {
-      labelH.release()
-      sym.unpersist(blocking = false)
-      require(false, "labelPropagation: vertices is empty")
-    }
-    var executed = 0
-    var converged = false
-    (0 until rounds).foreach { _ =>
-      if (!converged) {
-        val nbrMin = sym.join(label, col("src") === col("id"))
-          .groupBy(col("dst")).agg(min(col("label")).as("nmin"))
-        val (next, nextH, m) = Ckpt.trackedObserved(
+    try {
+      val r = Ckpt.iterate(vertices.select(col("id"), col("id").as("label")),
+          Seq(probe), rounds, (prev, now) => lsum(now).compareTo(lsum(prev)) == 0) {
+        (label, m) =>
+          // Empty vertex sets make the observed sum null and the convergence
+          // probe would NPE opaquely mid-round; fail like the sibling ops do.
+          require(lsum(m) != null, "labelPropagation: vertices is empty")
+          val nbrMin = sym.join(label, col("src") === col("id"))
+            .groupBy(col("dst")).agg(min(col("label")).as("nmin"))
           label.join(nbrMin, col("id") === col("dst"), "left")
             .select(col("id"),
-              least(col("label"), coalesce(col("nmin"), col("label"))).as("label")),
-          Seq(probe))
-        labelH.release()
-        label = next
-        labelH = nextH
-        executed += 1
-        val sumNow = lsum(m)
-        if (sumNow.compareTo(sumPrev) == 0) converged = true else sumPrev = sumNow
+              least(col("label"), coalesce(col("nmin"), col("label"))).as("label"))
       }
-    }
-    sym.unpersist(blocking = false)
-    (label, executed)
+      (r.state, r.rounds)
+    } finally sym.unpersist(blocking = false)
   }
 
   /** HITS hubs/authorities (Kleinberg, "Authoritative Sources in a
@@ -371,40 +352,26 @@ object Graph {
         greatest(col("src"), col("dst")).as("dst"))
       .filter(col("src") < col("dst"))
       .distinct()
-    // Tracked checkpoints (see [[Ckpt]]): each round's surviving edge set
-    // releases its predecessor's blocks once materialized. The FINAL
-    // round's blocks stay — the returned degree aggregate reads them.
     // Round-19: the edge-count probe is OBSERVED during each state's own
-    // checkpoint job ([[Ckpt.trackedObserved]]) — one job per round
-    // instead of checkpoint + separate count().
+    // checkpoint job ([[Ckpt.iterate]]) — one job per round instead of
+    // checkpoint + separate count().
     val probe = count(lit(1)).as("n")
     def n(m: Map[String, Any]): Long = m("n").asInstanceOf[Long]
-    var (e, eH, m0) = Ckpt.trackedObserved(e0, Seq(probe))
-    var nEdges = n(m0)
-    var executed = 0
-    var converged = false
-    (0 until rounds).foreach { _ =>
-      if (!converged) {
+    val r = Ckpt.iterate(e0, Seq(probe), rounds, (prev, now) => n(now) == n(prev)) {
+      (e, _) =>
         val deg = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
           .groupBy(col("id")).agg(count(lit(1)).as("degree"))
         val live = deg.filter(col("degree") >= k).select(col("id"))
-        val (next, nextH, m) = Ckpt.trackedObserved(
-          e.join(live.select(col("id").as("src")), Seq("src"), "left_semi")
-            .join(live.select(col("id").as("dst")), Seq("dst"), "left_semi")
-            .select(col("src"), col("dst")), Seq(probe))
-        eH.release()
-        e = next
-        eH = nextH
-        executed += 1
-        val nNow = n(m)
-        if (nNow == nEdges) converged = true else nEdges = nNow
-      }
+        e.join(live.select(col("id").as("src")), Seq("src"), "left_semi")
+          .join(live.select(col("id").as("dst")), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"))
     }
+    val e = r.state
     // Final degree is measured on the post-peel subgraph; vertices whose
     // last-round degree dropped below k are still reported (they fall in
     // round `rounds`+1) — the caller filters if it wants the strict core.
     (e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("degree")), executed)
+      .groupBy(col("id")).agg(count(lit(1)).as("degree")), r.rounds)
   }
 
   /** Multi-source BFS shortest distances, bounded to `rounds` hops (capped at 16 — past that the frontier loop's plan depth outgrows its usefulness; the early-exit probe already stops expanded graphs sooner) — the
@@ -444,36 +411,20 @@ object Graph {
     val spark = edges.sparkSession
     import spark.implicits._
     // Round-19: the (count, Σdist) probe is OBSERVED during each state's
-    // own checkpoint job ([[Ckpt.trackedObserved]]) — one job per round
-    // instead of checkpoint + separate aggregate. Count and decimal sum
-    // merge order-free, so the early-exit decision is unchanged.
+    // own checkpoint job ([[Ckpt.iterate]]) — one job per round instead
+    // of checkpoint + separate aggregate. Count and decimal sum merge
+    // order-free, so the early-exit decision is unchanged.
     val probes = Seq(count(lit(1)).as("n"),
       sum(col("dist").cast("decimal(38,0)")).as("s"))
-    def state(m: Map[String, Any]): (Long, java.math.BigDecimal) =
-      (m("n").asInstanceOf[Long], m("s").asInstanceOf[java.math.BigDecimal])
-    // Tracked checkpoints (see [[Ckpt]]): round i's distance table frees
-    // as soon as round i+1 materializes; the final round's blocks back
-    // the returned frame and stay.
-    var (dist, distH, m0) = Ckpt.trackedObserved(
-      sourceIds.distinct.map(id => (id, 0L)).toDF("v", "dist"), probes)
-    var prev = state(m0)
-    var executed = 0
-    var converged = false
-    for (_ <- 1 to rounds) {
-      if (!converged) {
-        val relaxed = dist.join(edges, dist("v") === edges("src"))
-          .select(col("dst").as("v"), (col("dist") + 1L).as("dist"))
-        val (next, nextH, m) = Ckpt.trackedObserved(dist.unionAll(relaxed)
-          .groupBy(col("v")).agg(min(col("dist")).as("dist")), probes)
-        distH.release()
-        dist = next
-        distH = nextH
-        executed += 1
-        val now = state(m)
-        if (now._1 == prev._1 && now._2.compareTo(prev._2) == 0) converged = true
-        else prev = now
-      }
+    def unchanged(prev: Map[String, Any], now: Map[String, Any]): Boolean =
+      now("n") == prev("n") && now("s").asInstanceOf[java.math.BigDecimal]
+        .compareTo(prev("s").asInstanceOf[java.math.BigDecimal]) == 0
+    val r = Ckpt.iterate(sourceIds.distinct.map(id => (id, 0L)).toDF("v", "dist"),
+        probes, rounds, unchanged) { (dist, _) =>
+      val relaxed = dist.join(edges, dist("v") === edges("src"))
+        .select(col("dst").as("v"), (col("dist") + 1L).as("dist"))
+      dist.unionAll(relaxed).groupBy(col("v")).agg(min(col("dist")).as("dist"))
     }
-    (dist, executed)
+    (r.state, r.rounds)
   }
 }

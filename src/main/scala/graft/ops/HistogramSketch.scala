@@ -271,10 +271,7 @@ object HistogramSketch {
     val merged = shardHist.groupBy("bin")
       .agg(sum(col("bin_count")).as("c_merged"))
     val direct = binned.groupBy("bin").agg(count(lit(1)).as("c_direct"))
-    val mm = merged.join(direct, Seq("bin"), "full_outer")
-      .agg(coalesce(sum(when(col("c_merged").isNull || col("c_direct").isNull
-        || col("c_merged") =!= col("c_direct"), lit(1L)).otherwise(lit(0L))),
-        lit(0L)).as("n_mismatch"))
+    val mm = Sharding.mergeMismatches(merged, direct, Seq("bin"), "c_merged", "c_direct")
     val mass = merged.agg(coalesce(sum(col("c_merged")), lit(0L)).as("m"))
       .crossJoin(broadcast(bounds.select(col("n"))))
       .select(when(col("m") =!= col("n"), lit(1L)).otherwise(lit(0L))

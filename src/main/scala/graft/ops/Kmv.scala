@@ -203,10 +203,8 @@ object Kmv {
       .withColumn("rn", row_number().over(wAll)).filter(col("rn") <= k)
     val direct = hashed.agg(udaf(BottomK(k)).apply(col("h")).as("sk"))
       .select(explode(col("sk")).as("h"))
-    val mm = merged.select(col("h"), lit(1).as("in_m"))
-      .join(direct.select(col("h"), lit(1).as("in_d")), Seq("h"), "full_outer")
-      .agg(coalesce(sum(when(col("in_m").isNull || col("in_d").isNull, lit(1L))
-        .otherwise(lit(0L))), lit(0L)).as("n_mismatch"))
+    val mm = Sharding.mergeMismatches(merged.select(col("h"), lit(1).as("in_m")),
+      direct.select(col("h"), lit(1).as("in_d")), Seq("h"), "in_m", "in_d")
     val st = merged.agg(count(lit(1)).cast("long").as("n_sketch"),
       max(col("h")).as("hk"))
     val exact = hashed.agg(countDistinct(col("h")).as("n_exact"))

@@ -179,7 +179,7 @@ object PageRank {
     // ONCE, not re-joined per round — so each round's dangling mass
     // Σ rank over outdeg-NULL vertices is a plain aggregate OF THE STATE
     // and rides the state's own checkpoint job as an OBSERVED metric
-    // (see [[Ckpt.trackedObserved]]; integer sum, order-free). The old
+    // (see [[Ckpt.iterate]]; integer sum, order-free). The old
     // shape paid, per round, a rank⋈outdeg anti-join + a scalar
     // aggregate + a broadcast-exchange build for the dangling share;
     // now the share folds in as a LITERAL (dsum and the DIV both
@@ -192,29 +192,24 @@ object PageRank {
       Option(m("dsum").asInstanceOf[java.lang.Long])
         .map(_.longValue).getOrElse(0L) / n
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    var (state, stateH, m0) = graft.ops.Ckpt.trackedObserved(
-      vertices.join(outdeg, col("id") === col("src"), "left")
-        .select(col("id"), col("outdeg"), lit(base).as("rank")), Seq(probe))
-    var ds = dshare(m0)
-    (0 until iterations).foreach { _ =>
-      val contrib = state.filter(col("outdeg").isNotNull)
-        .select(col("id").as("src"), expr("rank DIV outdeg").as("c"))
-      val incoming = e.join(contrib, Seq("src"))
-        .groupBy("dst").agg(sum(col("c")).as("insum"))
-      val (next, nextH, m) = graft.ops.Ckpt.trackedObserved(
+    try {
+      val r = graft.ops.Ckpt.iterate(
+          vertices.join(outdeg, col("id") === col("src"), "left")
+            .select(col("id"), col("outdeg"), lit(base).as("rank")),
+          Seq(probe), iterations) { (state, m) =>
+        val ds = dshare(m)
+        val contrib = state.filter(col("outdeg").isNotNull)
+          .select(col("id").as("src"), expr("rank DIV outdeg").as("c"))
+        val incoming = e.join(contrib, Seq("src"))
+          .groupBy("dst").agg(sum(col("c")).as("insum"))
         state.join(incoming, col("id") === col("dst"), "left")
           .select(col("id"), col("outdeg"),
             (lit(teleport) +
-              expr(s"(85 * (coalesce(insum, 0) + ${ds}L)) DIV 100")).as("rank")),
-        Seq(probe))
-      stateH.release()
-      state = next
-      stateH = nextH
-      ds = dshare(m)
-    }
-    val out = state.select(col("id"), col("rank")).localCheckpoint()
-    stateH.release()
-    eH.release()
-    out
+              expr(s"(85 * (coalesce(insum, 0) + ${ds}L)) DIV 100")).as("rank"))
+      }
+      val out = r.state.select(col("id"), col("rank")).localCheckpoint()
+      r.handle.release()
+      out
+    } finally eH.release()
   }
 }

@@ -77,4 +77,17 @@ object Sharding {
         (col("n_moved_mod").cast("double") / col("n_keys").cast("double"))
           .as("frac_moved_mod"))
   }
+
+  /** The comparison step of the shard-merge audits: full-outer join the
+    * merged and the direct sketch cells on `keys` and count the cells
+    * present on one side only or valued differently — one row,
+    * `n_mismatch`, 0 when the merge is exact. A set-valued sketch passes
+    * a constant column on each side, so only presence counts. */
+  def mergeMismatches(merged: DataFrame, direct: DataFrame, keys: Seq[String],
+      mergedCol: String, directCol: String): DataFrame = {
+    val (m, d) = (col(mergedCol), col(directCol))
+    merged.join(direct, keys, "full_outer")
+      .agg(coalesce(sum(when(m.isNull || d.isNull || m =!= d, lit(1L))
+        .otherwise(lit(0L))), lit(0L)).as("n_mismatch"))
+  }
 }

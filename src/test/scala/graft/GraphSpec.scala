@@ -1,6 +1,7 @@
 package graft
 
-import graft.ops.Graph
+import graft.ext.Similarity
+import graft.ops.{Ckpt, Graph, PageRank}
 import org.apache.spark.sql.functions._
 
 /** Hand-built-graph contracts for the triangle census and HITS — the
@@ -173,19 +174,29 @@ class GraphSpec extends SparkSuite {
     val sym = (und ++ und.map(_.swap)).toDF("src", "dst")
     val verts = (1L to 4L).toDF("id")
 
-    val (lp, lpRounds) = Graph.labelPropagationWithRounds(edges, verts, 12)
+    // Jobs per call, measured before the loops moved onto Ckpt.iterate:
+    // 15 (label propagation), 8 (k-core), 10 (BFS). One checkpoint job
+    // per round plus the map-stage jobs AQE submits for its joins.
+    lazy val lpRun = Graph.labelPropagationWithRounds(edges, verts, 12)
+    lazy val kcRun = Graph.kcorePeelWithRounds(edges, 2, 12)
+    lazy val bfsRun = Graph.bfsDistancesWithRounds(sym, Seq(1L), 12)
+    assert(jobsOf(lpRun) === 15)
+    assert(jobsOf(kcRun) === 8)
+    assert(jobsOf(bfsRun) === 10)
+
+    val (lp, lpRounds) = lpRun
     assert(lpRounds < 12, s"label propagation must exit early, ran $lpRounds")
     assert(lp.orderBy("id").as[(Long, Long)].collect().toSeq ===
       Graph.labelPropagation(edges, verts, 2).orderBy("id")
         .as[(Long, Long)].collect().toSeq,
       "early-exit labels must equal the fixed-round fixed point")
 
-    val (kc, kcRounds) = Graph.kcorePeelWithRounds(edges, 2, 12)
+    val (kc, kcRounds) = kcRun
     assert(kcRounds < 12, s"k-core peel must exit early, ran $kcRounds")
     assert(kc.orderBy("id").as[(Long, Long)].collect().toSeq ===
       Graph.kcorePeel(edges, 2, 3).orderBy("id").as[(Long, Long)].collect().toSeq)
 
-    val (bfs, bfsRounds) = Graph.bfsDistancesWithRounds(sym, Seq(1L), 12)
+    val (bfs, bfsRounds) = bfsRun
     assert(bfsRounds < 12, s"BFS must exit early, ran $bfsRounds")
     assert(bfs.orderBy("v").as[(Long, Long)].collect().toSeq ===
       Graph.bfsDistances(sym, Seq(1L), 4).orderBy("v")
@@ -197,5 +208,68 @@ class GraphSpec extends SparkSuite {
     val pverts = (1L to 6L).toDF("id")
     val (_, full) = Graph.labelPropagationWithRounds(path, pverts, 3)
     assert(full === 3, s"non-converged run must use every round, ran $full")
+  }
+
+  /** Ids of the RDDs `body` leaves persisted (set difference, so an older
+    * RDD the ContextCleaner drops meanwhile does not count). */
+  private def persistedBy(body: => Any): collection.Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    sc.getPersistentRDDs.keySet -- before
+  }
+
+  test("iterative loops keep only the final state's blocks") {
+    // Counts measured before the loops moved onto Ckpt.iterate: the final
+    // loop state backs the result (label propagation, k-core, BFS); the
+    // output checkpoint replaces it (conserving PageRank); pca keeps its
+    // matrix checkpoint, the final iterate and covSums' moment table.
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L))
+    val edges = und.toDF("src", "dst")
+    val sym = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val verts = (1L to 4L).toDF("id")
+    assert(persistedBy(Graph.labelPropagation(edges, verts, 12)).size === 1)
+    assert(persistedBy(Graph.kcorePeel(edges, 2, 12)).size === 1)
+    assert(persistedBy(Graph.bfsDistances(sym, Seq(1L), 12)).size === 1)
+    val pe = Seq((0L, 1L), (1L, 2L), (2L, 0L), (3L, 0L)).toDF("src", "dst")
+    assert(persistedBy(PageRank.pagerankConserving(pe, (0L to 5L).toDF("id"), 3)).size === 1)
+    val emb = Seq(
+      (1L, Array(0.1f, 1.0f), 0), (2L, Array(-0.1f, -1.0f), 0),
+      (3L, Array(0.2f, 2.0f), 0), (4L, Array(-0.2f, -2.0f), 0))
+      .toDF("vec_id", "embedding", "label")
+    assert(persistedBy(Similarity.pcaTopComponent(emb, iterations = 3, dim = 2)).size === 3)
+    // The empty-vertex guard fails inside the first step and frees both
+    // the initial state and the symmetric edge cache.
+    val left = persistedBy {
+      val e = intercept[IllegalArgumentException](
+        Graph.labelPropagation(edges, Seq.empty[Long].toDF("id"), 3))
+      assert(e.getMessage.contains("labelPropagation: vertices is empty"))
+    }
+    assert(left.isEmpty, s"empty-vertex failure left RDDs $left persisted")
+  }
+
+  test("Ckpt.iterate releases the live state and rethrows when a step fails") {
+    val boom = new IllegalStateException("step 2 fails")
+    var steps = 0
+    val left = persistedBy {
+      val e = intercept[IllegalStateException](
+        Ckpt.iterate((1L to 4L).toDF("id"), Seq(count(lit(1)).as("n")), 5) { (s, _) =>
+          steps += 1
+          if (steps == 2) throw boom
+          s.select((col("id") + 1).as("id"))
+        })
+      assert(e eq boom, "the step's own exception must surface")
+    }
+    assert(steps === 2)
+    assert(left.isEmpty, s"a failed loop left RDDs $left persisted")
+    // Without a failure the same loop keeps exactly its final state and
+    // reports it with its probe values.
+    var r: Ckpt.Rounds = null
+    val kept = persistedBy {
+      r = Ckpt.iterate((1L to 4L).toDF("id"), Seq(count(lit(1)).as("n")), 5,
+        (_, now) => now("n") == 3L) { (s, _) => s.filter(col("id") > 1) }
+    }
+    assert(r.rounds === 1 && r.probes("n") === 3L && r.state.count() === 3L)
+    assert(kept.size === 1)
   }
 }
