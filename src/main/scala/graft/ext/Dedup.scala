@@ -1527,15 +1527,7 @@ object Dedup {
     // O(log n)-round run would OOM the driver on plan strings alone long
     // before data is the problem. (A cluster deployment with a
     // checkpoint dir would use reliable checkpoint() instead.)
-    // Tracked checkpoints (see [[graft.ops.Ckpt]]): a bare unpersist()
-    // on a checkpointed Dataset is a no-op, so each round's edge state
-    // carries a real release handle; the final round's blocks back the
-    // returned star aggregate and stay.
-    var (edges, edgesH) = graft.ops.Ckpt.tracked(pairs.select(
-      greatest(col("doc_a"), col("doc_b")).as("u"),
-      least(col("doc_a"), col("doc_b")).as("v")).distinct())
-    var rounds = 0
-    var changed = edges.count()
+    def rows(p: Map[String, Any]): Long = p(graft.ops.Ckpt.Rows).asInstanceOf[Long]
     // The rounds shuffle only the edge set — orders of magnitude smaller
     // than the corpus. Size the loop's shuffle width to the measured edge
     // count (~100k edges per partition, capped at the session width):
@@ -1545,49 +1537,53 @@ object Dedup {
     // explicit repartition(width, u) — hash(u) satisfies every downstream
     // per-u window and (u,v) aggregate, so each phase plans exactly one
     // exchange at the chosen width and the session conf is never touched
-    // (a conf set/restore would leak to concurrent queries).
-    val loopWidth = math.max(1, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt,
-      (changed / 100000L + 1L).toInt))
-    while (changed > 0 && rounds < maxIterations) {
-      // Large-star: every node's strictly-larger neighbors attach to the
-      // minimum of its neighborhood (including itself).
-      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-        .repartition(loopWidth, col("u"))
-      val large = sym
-        .withColumn("m", least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .repartition(loopWidth, col("u"))
-        .distinct()
-      // Small-star: every node's smaller neighbors (and the node itself)
-      // attach to the minimum of that smaller-neighborhood.
-      val withMin = large
-        .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
-      val small = withMin.select(col("v").as("u"), col("m").as("v"))
-        .union(withMin.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .repartition(loopWidth, col("u"))
-        .distinct()
-      val (smallCk, smallH) = graft.ops.Ckpt.tracked(small)
-      // Converged when the edge multiset is unchanged (symmetric
-      // difference empty) — one count job via a parity aggregate.
-      changed = smallCk.unionAll(edges).repartition(loopWidth, col("u"))
-        .groupBy("u", "v").count()
-        .filter(col("count") === 1).count()
-      edgesH.release()
-      edges = smallCk
-      edgesH = smallH
-      rounds += 1
+    // (a conf set/restore would leak to concurrent queries). The count is
+    // the one the initial checkpoint's own job returns; round 1 reads it.
+    var loopWidth = 1
+    val r = graft.ops.Ckpt.iterate(pairs.select(
+          greatest(col("doc_a"), col("doc_b")).as("u"),
+          least(col("doc_a"), col("doc_b")).as("v")).distinct(),
+        Nil, maxIterations,
+        // Converged when the edge multiset is unchanged (symmetric
+        // difference empty) — one count job via a parity aggregate.
+        settled = (edges, smallCk) => smallCk.unionAll(edges)
+          .repartition(loopWidth, col("u"))
+          .groupBy("u", "v").count()
+          .filter(col("count") === 1).count() == 0) { (edges, p, round) =>
+      if (round == 1) loopWidth = math.max(1, math.min(
+        spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        (rows(p) / 100000L + 1L).toInt))
+      if (rows(p) == 0) edges // no edges: every node labels itself
+      else {
+        // Large-star: every node's strictly-larger neighbors attach to the
+        // minimum of its neighborhood (including itself).
+        val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+          .repartition(loopWidth, col("u"))
+        val large = sym
+          .withColumn("m", least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
+          .filter(col("v") > col("u"))
+          .select(col("v").as("u"), col("m").as("v"))
+          .repartition(loopWidth, col("u"))
+          .distinct()
+        // Small-star: every node's smaller neighbors (and the node itself)
+        // attach to the minimum of that smaller-neighborhood.
+        val withMin = large
+          .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
+        withMin.select(col("v").as("u"), col("m").as("v"))
+          .union(withMin.select(col("u"), col("m").as("v")))
+          .filter(col("u") =!= col("v"))
+          .repartition(loopWidth, col("u"))
+          .distinct()
+      }
     }
     // At convergence edges are stars (node -> component min); the min-agg
     // also yields the best-known label if maxIterations cut the loop.
-    val stars = edges.groupBy(col("u").as("doc_id")).agg(min(col("v")).as("cluster"))
+    val stars = r.state.groupBy(col("u").as("doc_id")).agg(min(col("v")).as("cluster"))
     val labels = nodes
       .join(stars, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
       .withColumn("is_canonical", col("doc_id") === col("cluster"))
-    (labels, rounds)
+    (labels, r.rounds)
   }
 
   /** Release every cached intermediate this module holds for a session —

@@ -493,18 +493,13 @@ object Similarity {
       .localCheckpoint()
     def mmrExpr = (lit(lambda) * col("rel") - lit(1.0 - lambda) * col("pen")).as("mmr")
     val wMmr = Window.partitionBy(col("qid")).orderBy(col("mmr").desc, col("doc_id").asc)
-    var selected = cand.withColumn("pen", lit(0.0))
+    val first = cand.withColumn("pen", lit(0.0))
       .select(col("qid"), col("doc_id"), col("rel"), col("pen"), mmrExpr)
       .withColumn("rn", row_number().over(wMmr)).filter(col("rn") === 1)
       .select(col("qid"), col("doc_id"), col("rel"), col("pen"), col("mmr"),
         lit(1).as("round"))
-    // Tracked round states (the ops/Graph Pregel-loop discipline):
-    // each round's checkpoint releases as soon as the next round has
-    // materialized — a bare localCheckpoint's blocks would outlive the
-    // call until a JVM GC ran. The final state's handle is NOT released
-    // (the returned frame reads it); it frees via GC like any result.
-    var selH = graft.ops.Ckpt.empty
-    for (t <- 2 to k) {
+    // Round t appends each query's argmax over the not-yet-selected pool.
+    def extend(selected: DataFrame, t: Int): DataFrame = {
       val remaining = cand.join(selected.select("qid", "doc_id"), Seq("qid", "doc_id"),
         "left_anti")
       val pen = remaining
@@ -516,11 +511,13 @@ object Similarity {
         .withColumn("rn", row_number().over(wMmr)).filter(col("rn") === 1)
         .select(col("qid"), col("doc_id"), col("rel"), col("pen"), col("mmr"),
           lit(t).as("round"))
-      val (sel2, h2) = graft.ops.Ckpt.tracked(selected.unionByName(next))
-      selH.release()
-      selected = sel2
-      selH = h2
+      selected.unionByName(next)
     }
+    // The round-2 frame is the loop's first state; round t is step t − 2.
+    val selected = if (k == 1) first
+      else graft.ops.Ckpt.iterate(extend(first, 2), Nil, k - 2) {
+        (s, _, step) => extend(s, step + 2)
+      }.state
     selected.select(col("qid"), col("round"), col("doc_id"),
       col("rel"), col("pen"), col("mmr"))
   }
@@ -984,7 +981,7 @@ object Similarity {
     val r = graft.ops.Ckpt.iterate(
         matvec((1 to dim).map(d => (d, if (d == 1) 1000000L else 0L)).toDF("j", "v_fp")),
         Seq(max(abs(col("w"))).as("m")), iterations - 1) {
-      (w, wm) => matvec(renormalized(w, wm))
+      (w, wm, _) => matvec(renormalized(w, wm))
     }
     renormalized(r.state, r.probes).select(col("j").as("dim"), col("v_fp"),
       (col("v_fp").cast("double") / lit(1000000.0)).as("component"))

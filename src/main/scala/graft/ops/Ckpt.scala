@@ -20,49 +20,47 @@ import scala.jdk.CollectionConverters._
   * happens to run — exactly the memory pressure the explicit cleanup
   * calls were written to prevent.
   *
-  * [[tracked]] reads the checkpoint's backing RDD id DIRECTLY off the
-  * returned plan (the `LogicalRDD` the checkpoint wraps) and returns a
-  * [[Ckpt.Handle]] whose `release()` unpersists those blocks directly.
-  * It must NOT be captured as a registration-window diff around the
-  * call: even the lazy `localCheckpoint(eager = false)` builds the
-  * physical RDD DAG inside the call, and constructing an
-  * InMemoryTableScan persist-registers its cache BUFFER RDD with the
-  * context right there (under AQE the call can even run whole stage
-  * jobs) — so a window diff ADOPTS any live `.cache()`/memo buffer the
-  * tracked plan reads first, and `release()` then evicts it
-  * permanently (the buffer builder is a lazy val; the storage level
-  * never comes back). Measured: HITS re-ran the annPairs cosine verify
-  * every half-round and the whole graph family's rerun medians sat ~2×
-  * their round-11 values until the window capture was replaced.
+  * A tracked checkpoint reads its backing RDD id DIRECTLY off the
+  * returned plan (the `LogicalRDD` the checkpoint wraps) and frees
+  * exactly those blocks. It must NOT be captured as a
+  * registration-window diff around the call: even the lazy
+  * `localCheckpoint(eager = false)` builds the physical RDD DAG inside
+  * the call, and constructing an InMemoryTableScan persist-registers its
+  * cache BUFFER RDD with the context right there (under AQE the call can
+  * even run whole stage jobs) — so a window diff ADOPTS any live
+  * `.cache()`/memo buffer the tracked plan reads first, and the release
+  * then evicts it permanently (the buffer builder is a lazy val; the
+  * storage level never comes back). Measured: HITS re-ran the annPairs
+  * cosine verify every half-round and the whole graph family's rerun
+  * medians sat ~2× their round-11 values until the window capture was
+  * replaced. Direct id capture is per-Dataset, so concurrent checkpoints
+  * on other threads can never cross-adopt each other's RDDs. The ids are
+  * captured before the materializing job runs, so a checkpoint whose own
+  * job fails frees its blocks before the failure propagates.
   *
   * BARE `localCheckpoint()` calls in one-shot query paths (x90's fact
   * projection, the mmd moment tables, exactAscRank's bucketed input,
-  * triangleStats' edge frames …) are deliberate: their blocks back the
-  * RETURNED frame, so no explicit release point exists inside the
-  * operator, and the blocks are freed by the ContextCleaner when the
-  * backing RDD is garbage-collected (plus wholesale at session teardown).
-  * The tracked handles here are for LOOP states, where a long session
-  * would otherwise accumulate one dead state per round; a query-grain
-  * frame at metadata size does not need that discipline (round-18
-  * advice, adjudicated: documented rather than registered — the Ckpt
-  * registry guards cache-reader releases, not GC timing).
+  * triangleStats' edge frames, pagerankWeighted's edges …) are
+  * deliberate: their blocks back the RETURNED frame, so no explicit
+  * release point exists inside the operator, and the blocks are freed by
+  * the ContextCleaner when the backing RDD is garbage-collected (plus
+  * wholesale at session teardown).
   *
   * Safety contract: an unreliable (local) checkpoint is UNRECOMPUTABLE
   * once its blocks are dropped — only release a state none of your live
-  * datasets still read. Checkpoints are eager, so "the next round's state
-  * has materialized" is exactly that proof: round i+1's blocks exist and
-  * no longer read round i's. Direct id capture is per-Dataset, so
-  * concurrent `tracked` calls on other threads can never cross-adopt
-  * each other's RDDs.
-  *
-  * Loop contract, kept by [[iterate]] for every loop built on it:
-  *  - a round's state is released only after its successor has
-  *    materialized;
-  *  - if a step or the convergence test throws, the live state is
-  *    released and the original exception propagates;
-  *  - the final state's blocks are kept: they back the returned result.
-  *    A caller that checkpoints its own output from the final state may
-  *    release [[Rounds.handle]] afterwards.
+  * datasets still read. This object is the only code that creates, holds
+  * or releases a tracked checkpoint, under one of two lifetimes:
+  *  - the LOOP ([[iterate]]): a round's state is released only after its
+  *    successor has materialized and the convergence tests over both have
+  *    run; the final state's blocks are kept, since they back the
+  *    returned result, unless [[Rounds.into]] checkpoints an output from
+  *    it and releases it;
+  *  - the SCOPE ([[scoped]]): a checkpoint lives exactly as long as the
+  *    body that reads it.
+  * On failure every live tracked state is released and the original
+  * exception propagates; a release that itself throws (the
+  * [[registerCached]] tripwire) is attached to it as suppressed, never
+  * in its place.
   */
 object Ckpt {
 
@@ -209,11 +207,11 @@ object Ckpt {
     }
   }
 
-  /** Releases the checkpoint blocks captured by [[tracked]]. Idempotent;
+  /** Releases the blocks of one tracked checkpoint. Idempotent;
     * releasing after the owning RDD was already cleaned is a no-op.
     * Throws if a registered cache entry still reads any of the handle's
     * RDDs — see [[registerCached]]. */
-  final class Handle private[Ckpt] (sc: SparkContext, ids: Set[Int]) {
+  private[graft] final class Handle private[Ckpt] (sc: SparkContext, ids: Set[Int]) {
     def release(): Unit = {
       val clash = cachedReaders.synchronized {
         ids.toSeq.flatMap(id => cachedReaders.get((sc, id)).map(id -> _))
@@ -229,97 +227,124 @@ object Ckpt {
     }
   }
 
-  private val noop = new Handle(null, Set.empty)
+  /** Releases `h` after `failure`, attaching a failed release to it as
+    * suppressed so the original exception is the one that surfaces. */
+  private def releaseAfter(h: Handle, failure: Throwable): Unit =
+    try h.release() catch { case t: Throwable => failure.addSuppressed(t) }
 
-  /** Eagerly-materialized `localCheckpoint()` plus a handle that really
-    * frees its blocks. The handle owns EXACTLY the checkpoint's backing
-    * RDD (the `LogicalRDD` the returned Dataset wraps — the RDD that
-    * `RDD.localCheckpoint()` persist-registered), never anything a
-    * registration-window diff might sweep up (see the object scaladoc
-    * for why the diff adopts live cache buffers). */
-  def tracked(df: DataFrame): (DataFrame, Handle) = {
-    val sc = df.sparkSession.sparkContext
-    val out = df.localCheckpoint(eager = false)
-    val ids = out.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    out.count()
-    (out, new Handle(sc, ids))
+  /** Runs `body`, then releases `h` whether or not `body` threw. */
+  private def releasing[T](h: Handle)(body: => T): T = {
+    val out = try body catch { case t: Throwable => releaseAfter(h, t); throw t }
+    h.release()
+    out
   }
 
-  /** A handle that releases nothing — the initial value for loop-state
-    * handle vars whose first state is not checkpointed. */
-  def empty: Handle = noop
+  /** The probe key of an unprobed checkpoint: its row count. */
+  val Rows = "rows"
 
-  /** [[tracked]] with aggregate metrics OBSERVED during the checkpoint's
+  private val ProbeName = "ckpt_probe"
+
+  /** A materialized `localCheckpoint()` of `df`, the handle that frees
+    * its blocks, and its probe values.
+    *
+    * With `metrics`, their values are OBSERVED during the checkpoint's
     * own materialization job (round-19, guide §1.2/§2.4): the iterative
     * operators used to launch one EXTRA job per round — a scalar
     * aggregate over the just-checkpointed state (convergence probe,
     * renormalization max, dangling mass) — doubling the per-round job
     * count of driver-synced loops that are scheduling-bound at small
-    * scale and a driver round-trip per round at any scale.
-    * `Dataset.observe` attaches a CollectMetrics node whose accumulator
-    * is populated by the SAME job that materializes the checkpoint, so
-    * the probe rides along for free.
+    * scale. `Dataset.observe` attaches a CollectMetrics node whose
+    * accumulator is filled by the SAME job that materializes the
+    * checkpoint: one `count()` of the checkpoint's backing RDD, the job
+    * `localCheckpoint(eager = true)` runs. The values are read off the
+    * observed plan's `observedMetrics`, not an `Observation`: an
+    * Observation completes at the lazy checkpoint call, before any task
+    * ran, with NULL metrics. Metric expressions must be
+    * aggregation-ORDER-FREE (integer/decimal sums, counts, min/max) —
+    * they are merged from per-task partials; a double sum here would
+    * break the loops' bit-determinism contract. A metric over zero rows
+    * yields null, exactly like the aggregate it replaces.
     *
-    * MUST use the EAGER `localCheckpoint(eager = true)`: the eager path
-    * runs inside `withAction` on the ORIGINAL plan's QueryExecution, so
-    * the listener that completes the Observation sees the CollectMetrics
-    * node. The lazy-checkpoint-then-count() shape [[tracked]] uses fires
-    * the listener on the LogicalRDD wrapper instead and the observation
-    * completes with NULL metrics (measured) — silently, not loudly.
-    *
-    * Metric expressions must be aggregation-ORDER-FREE (integer/decimal
-    * sums, counts, min/max) — they are merged from per-task partials; a
-    * double sum here would break the loops' bit-determinism contract.
-    * Returns the observed values keyed by metric alias; a metric over
-    * zero rows yields null, exactly like the aggregate it replaces.
+    * Without metrics the checkpoint is materialized by `Dataset.count()`
+    * and the probe map holds that count under [[Rows]].
     */
   private[ops] def trackedObserved(df: DataFrame,
       metrics: Seq[org.apache.spark.sql.Column]): (DataFrame, Handle, Map[String, Any]) = {
-    require(metrics.nonEmpty, "trackedObserved needs at least one metric")
-    val sc = df.sparkSession.sparkContext
-    val obs = org.apache.spark.sql.Observation()
-    val out = df.observe(obs, metrics.head, metrics.tail: _*)
-      .localCheckpoint(eager = true)
-    val ids = out.queryExecution.logical.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }.toSet
-    (out, new Handle(sc, ids), obs.get)
+    val observed =
+      if (metrics.isEmpty) df else df.observe(ProbeName, metrics.head, metrics.tail: _*)
+    val out = observed.localCheckpoint(eager = false)
+    val rdds = out.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }
+    val h = new Handle(df.sparkSession.sparkContext, rdds.map(_.id).toSet)
+    val probes = try {
+      if (metrics.isEmpty) Map[String, Any](Rows -> out.count())
+      else {
+        rdds.foreach(_.count())
+        val row = observed.queryExecution.observedMetrics(ProbeName)
+        row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+      }
+    } catch { case t: Throwable => releaseAfter(h, t); throw t }
+    (out, h, probes)
+  }
+
+  /** A materialized `localCheckpoint()` and the handle that frees it. */
+  private[graft] def tracked(df: DataFrame): (DataFrame, Handle) = {
+    val (out, h, _) = trackedObserved(df, Nil)
+    (out, h)
+  }
+
+  /** Checkpoints `df` (materialized and counted), runs `body` on the
+    * checkpoint and then releases it: the scope lifetime. `body`'s result
+    * must not read the checkpoint lazily past the scope. */
+  def scoped[T](df: DataFrame)(body: DataFrame => T): T = {
+    val (out, h) = tracked(df)
+    releasing(h)(body(out))
   }
 
   /** The outcome of [[iterate]]: the final state, the probe values
-    * observed while it checkpointed, the number of steps run, and the
-    * handle of the final state's blocks. */
-  final case class Rounds(state: DataFrame, probes: Map[String, Any],
-      rounds: Int, handle: Handle)
+    * observed while it checkpointed, and the number of steps run. The
+    * final state's blocks are kept; [[into]] ends their lifetime. */
+  final class Rounds private[Ckpt] (val state: DataFrame,
+      val probes: Map[String, Any], val rounds: Int, private[Ckpt] val handle: Handle) {
+    /** Eagerly checkpoints `f(state)`, an output that no longer needs the
+      * loop, and releases the final state. The output's blocks back the
+      * caller's result, like any bare checkpoint. */
+    def into(f: DataFrame => DataFrame): DataFrame =
+      releasing(handle)(f(state).localCheckpoint())
+  }
 
-  /** The round loop of the iterative operators, under the loop contract
+  /** The round loop of the iterative operators, under the loop lifetime
     * of the object scaladoc. `init` checkpoints with `probes` observed
-    * ([[trackedObserved]]); then up to `maxRounds` times `step` maps the
-    * live state and its probe values to the next frame, which checkpoints
-    * the same way. The loop stops early once `converged(prev, now)` holds
-    * on two successive probe maps. One job per checkpoint. */
+    * ([[trackedObserved]]; with no probes the map holds [[Rows]]); then up
+    * to `maxRounds` times `step` maps the live state, its probe values and
+    * the 1-based index of the round it computes to the next frame, which
+    * checkpoints the same way. A step that returns its input state ends
+    * the loop without a checkpoint. Otherwise the loop stops once
+    * `converged` holds on the two successive probe maps or `settled` on
+    * the two successive states. One checkpoint job per round, plus
+    * whatever jobs `settled` runs. */
   def iterate(init: DataFrame, probes: Seq[org.apache.spark.sql.Column],
       maxRounds: Int,
-      converged: (Map[String, Any], Map[String, Any]) => Boolean = (_, _) => false)(
-      step: (DataFrame, Map[String, Any]) => DataFrame): Rounds = {
+      converged: (Map[String, Any], Map[String, Any]) => Boolean = (_, _) => false,
+      settled: (DataFrame, DataFrame) => Boolean = (_, _) => false)(
+      step: (DataFrame, Map[String, Any], Int) => DataFrame): Rounds = {
     val (s0, h0, m0) = trackedObserved(init, probes)
-    var cur = Rounds(s0, m0, 0, h0)
+    var cur = new Rounds(s0, m0, 0, h0)
     try {
       var done = false
       while (!done && cur.rounds < maxRounds) {
-        val (s, h, m) = trackedObserved(step(cur.state, cur.probes), probes)
-        val prev = cur
-        cur = Rounds(s, m, prev.rounds + 1, h)
-        prev.handle.release()
-        done = converged(prev.probes, m)
+        val next = step(cur.state, cur.probes, cur.rounds + 1)
+        if (next eq cur.state) done = true
+        else {
+          val prev = cur
+          val (s, h, m) = trackedObserved(next, probes)
+          cur = new Rounds(s, m, prev.rounds + 1, h)
+          done = releasing(prev.handle)(
+            converged(prev.probes, m) || settled(prev.state, s))
+        }
       }
       cur
-    } catch {
-      case t: Throwable =>
-        cur.handle.release()
-        throw t
-    }
+    } catch { case t: Throwable => releaseAfter(cur.handle, t); throw t }
   }
 }

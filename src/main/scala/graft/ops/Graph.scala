@@ -214,7 +214,7 @@ object Graph {
     try {
       val r = Ckpt.iterate(vertices.select(col("id"), col("id").as("label")),
           Seq(probe), rounds, (prev, now) => lsum(now).compareTo(lsum(prev)) == 0) {
-        (label, m) =>
+        (label, m, _) =>
           // Empty vertex sets make the observed sum null and the convergence
           // probe would NPE opaquely mid-round; fail like the sibling ops do.
           require(lsum(m) != null, "labelPropagation: vertices is empty")
@@ -233,10 +233,10 @@ object Graph {
     * round, auth(v) = Σ hub over in-edges then renormalize so the max
     * auth is `base`; hub(v) = Σ auth over out-edges, renormalized the
     * same way. Renormalization is integer `x·base DIV max` with the max
-    * as a broadcast scalar aggregate — the same shape as
+    * observed in the state's own checkpoint job — the same shape as
     * [[PageRank.pagerankConserving]]'s dangling share, and like there the
     * per-round state is referenced twice (the sum and its max), so each
-    * round persists (Pregel convention) instead of unrolling. All
+    * half-round persists (Pregel convention) instead of unrolling. All
     * arithmetic is BIGINT, so results are bit-deterministic under any
     * aggregation order and the DuckDB oracle replays every round.
     *
@@ -259,15 +259,11 @@ object Graph {
     // raw score exceed n·base and the renormalization product wrap a
     // long silently despite the guard passing.
     val e = edges.select(col("src"), col("dst")).distinct().cache()
-    var hub = vertices.select(col("id"), lit(base).as("hub"))
-    // auth carries no real initial value: the first half-round computes
-    // it from hub alone and overwrites this placeholder before any read.
-    var auth = hub.select(col("id"), col("hub").as("auth"))
     // Per half-round the raw sum state localCheckpoints (eager, lineage-
     // truncating — each round references the previous state, so an
     // unrolled plan would quadruple per round) and its renormalization
     // MAX is OBSERVED during that same checkpoint job (round-19, see
-    // [[Ckpt.trackedObserved]]): max merges order-free, and the max of a
+    // [[Ckpt.iterate]]): max merges order-free, and the max of a
     // materialized integer state is one deterministic value, so folding
     // it into the renormalization as a LITERAL replaces the old
     // crossJoin(broadcast(max-aggregate)) — which cost a broadcast-build
@@ -275,45 +271,33 @@ object Graph {
     // time (broadcast builds share nothing) — with a plain projection
     // over the checkpoint blocks. Two jobs per round instead of ~six;
     // bit-identical integer arithmetic.
-    // Tracked checkpoints (see [[Ckpt]]): round i−1's raw states release
-    // as soon as their last consumer has materialized — the auth raws
-    // when the next hub raw exists, the hub raws when the next auth raw
-    // exists; the final pair backs the output join until it checkpoints.
-    var hubRawH = Ckpt.empty
-    var authRawH = Ckpt.empty
-    def obsMax(m: Map[String, Any]): Long =
-      math.max(1L, Option(m("m").asInstanceOf[java.lang.Long])
-        .map(_.longValue).getOrElse(0L))
-    (0 until iterations).foreach { _ =>
-      val (aRaw, aRawH, am) = Ckpt.trackedObserved(vertices
-        .join(e.join(hub, col("id") === col("src"))
-            .groupBy("dst").agg(sum(col("hub")).as("s")),
-          col("id") === col("dst"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("raw")),
-        Seq(max(col("raw")).as("m")))
-      // The previous auth raw's last consumer was the previous hub raw;
-      // the previous hub raw was just consumed by this aRaw.
-      authRawH.release()
-      hubRawH.release()
-      auth = aRaw.select(col("id"),
-        expr(s"(raw * ${base}L) DIV ${obsMax(am)}L").as("auth"))
-      val (hRaw, hRawH, hm) = Ckpt.trackedObserved(vertices
-        .join(e.join(auth, col("id") === col("dst"))
-            .groupBy("src").agg(sum(col("auth")).as("s")),
-          col("id") === col("src"), "left")
-        .select(col("id"), coalesce(col("s"), lit(0L)).as("raw")),
-        Seq(max(col("raw")).as("m")))
-      hub = hRaw.select(col("id"),
-        expr(s"(raw * ${base}L) DIV ${obsMax(hm)}L").as("hub"))
-      authRawH = aRawH
-      hubRawH = hRawH
+    //
+    // The state is one row per vertex: `raw`, the score just summed, and
+    // `other`, the renormalized score of the other side it was summed
+    // from. Odd half-rounds sum hub into auth over in-edges, even ones
+    // auth into hub over out-edges; the renormalized state is the left
+    // side of each join, so the final state carries both scores.
+    def halfRound(norm: DataFrame, toAuth: Boolean): DataFrame = {
+      val (from, to) = if (toAuth) ("src", "dst") else ("dst", "src")
+      norm.join(e.join(norm, col("id") === col(from))
+          .groupBy(to).agg(sum(col("x")).as("s")),
+        col("id") === col(to), "left")
+        .select(col("id"), coalesce(col("s"), lit(0L)).as("raw"), col("x").as("other"))
     }
-    val out = hub.join(auth, Seq("id"))
-      .select(col("id"), col("hub"), col("auth")).localCheckpoint()
-    hubRawH.release()
-    authRawH.release()
-    e.unpersist(blocking = false)
-    out
+    def renormalized(state: DataFrame, m: Map[String, Any]): DataFrame = {
+      val top = math.max(1L, Option(m("m").asInstanceOf[java.lang.Long])
+        .map(_.longValue).getOrElse(0L))
+      state.select(col("id"), expr(s"(raw * ${base}L) DIV ${top}L").as("x"), col("other"))
+    }
+    try {
+      val r = Ckpt.iterate(
+          halfRound(vertices.select(col("id"), lit(base).as("x")), toAuth = true),
+          Seq(max(col("raw")).as("m")), 2 * iterations - 1) { (state, m, round) =>
+        halfRound(renormalized(state, m), toAuth = round % 2 == 0)
+      }
+      r.into(renormalized(_, r.probes)
+        .select(col("id"), col("x").as("hub"), col("other").as("auth")))
+    } finally e.unpersist(blocking = false)
   }
 
   /** Bounded k-core peeling (Seidman 1983's coreness, in the fixed-round
@@ -358,7 +342,7 @@ object Graph {
     val probe = count(lit(1)).as("n")
     def n(m: Map[String, Any]): Long = m("n").asInstanceOf[Long]
     val r = Ckpt.iterate(e0, Seq(probe), rounds, (prev, now) => n(now) == n(prev)) {
-      (e, _) =>
+      (e, _, _) =>
         val deg = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
           .groupBy(col("id")).agg(count(lit(1)).as("degree"))
         val live = deg.filter(col("degree") >= k).select(col("id"))
@@ -420,7 +404,7 @@ object Graph {
       now("n") == prev("n") && now("s").asInstanceOf[java.math.BigDecimal]
         .compareTo(prev("s").asInstanceOf[java.math.BigDecimal]) == 0
     val r = Ckpt.iterate(sourceIds.distinct.map(id => (id, 0L)).toDF("v", "dist"),
-        probes, rounds, unchanged) { (dist, _) =>
+        probes, rounds, unchanged) { (dist, _, _) =>
       val relaxed = dist.join(edges, dist("v") === edges("src"))
         .select(col("dst").as("v"), (col("dist") + 1L).as("dist"))
       dist.unionAll(relaxed).groupBy(col("v")).agg(min(col("dist")).as("dist"))

@@ -97,10 +97,9 @@ object PageRank {
     // eager action, and on an un-memoized expensive edge generator it
     // would evaluate the whole upstream build once for the guard and
     // again for outw + every iteration join. The blocks back the
-    // returned lazy plan, so the handle stays (the componentsFromEdges
-    // final-round convention).
-    val (e, _) = graft.ops.Ckpt.tracked(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
+    // returned lazy plan.
+    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+      .localCheckpoint()
     val wStats = e.agg(min(col("w")).as("wmin"),
       max(col("w")).as("wmax")).first()
     require(!wStats.isNullAt(0), "pagerankWeighted: empty edge set")
@@ -162,18 +161,6 @@ object PageRank {
       s"pagerankConserving: 85 * (n_vertices($n)+1) * base($base) would " +
         "overflow Long; pass a smaller `base` (precision is 1/base)")
     val teleport = base * 15L / 100L
-    // localCheckpoint, not cache() (round-12 perf fix): unlike the
-    // unrolled single-plan siblings, this loop references the edge set
-    // every round, and with it only LAZILY cached those jobs re-entered
-    // the expensive upstream build (the sparse banded annPairs behind
-    // x77) instead of reading one materialized copy — measured: isolated
-    // x77 ~14 s vs sibling x73's ~6 s on the SAME edges; eager
-    // checkpointing before the loop brought x77 to ~5 s. The invariant
-    // is materialized exactly once, before any round job starts
-    // (Ckpt.tracked, not bare localCheckpoint: Dataset.unpersist is a
-    // no-op on checkpoint blocks, so the cleanup below needs a real
-    // release handle).
-    val (e, eH) = graft.ops.Ckpt.tracked(edges)
     // Round-19 loop restructure (guide §1.2/§2.4): the per-round state
     // carries (id, outdeg, rank) — outdeg joined onto the vertex set
     // ONCE, not re-joined per round — so each round's dangling mass
@@ -191,12 +178,21 @@ object PageRank {
     def dshare(m: Map[String, Any]): Long =
       Option(m("dsum").asInstanceOf[java.lang.Long])
         .map(_.longValue).getOrElse(0L) / n
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    try {
-      val r = graft.ops.Ckpt.iterate(
+    // localCheckpoint, not cache() (round-12 perf fix): unlike the
+    // unrolled single-plan siblings, this loop references the edge set
+    // every round, and with it only LAZILY cached those jobs re-entered
+    // the expensive upstream build (the sparse banded annPairs behind
+    // x77) instead of reading one materialized copy — measured: isolated
+    // x77 ~14 s vs sibling x73's ~6 s on the SAME edges; eager
+    // checkpointing before the loop brought x77 to ~5 s. The invariant
+    // is materialized exactly once, before any round job starts, and
+    // released when the loop's output has checkpointed.
+    graft.ops.Ckpt.scoped(edges) { e =>
+      val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
+      graft.ops.Ckpt.iterate(
           vertices.join(outdeg, col("id") === col("src"), "left")
             .select(col("id"), col("outdeg"), lit(base).as("rank")),
-          Seq(probe), iterations) { (state, m) =>
+          Seq(probe), iterations) { (state, m, _) =>
         val ds = dshare(m)
         val contrib = state.filter(col("outdeg").isNotNull)
           .select(col("id").as("src"), expr("rank DIV outdeg").as("c"))
@@ -206,10 +202,7 @@ object PageRank {
           .select(col("id"), col("outdeg"),
             (lit(teleport) +
               expr(s"(85 * (coalesce(insum, 0) + ${ds}L)) DIV 100")).as("rank"))
-      }
-      val out = r.state.select(col("id"), col("rank")).localCheckpoint()
-      r.handle.release()
-      out
-    } finally eH.release()
+      }.into(_.select(col("id"), col("rank")))
+    }
   }
 }

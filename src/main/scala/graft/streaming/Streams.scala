@@ -873,25 +873,15 @@ object Streams {
       java.net.URI.create(indexPath), hc)
     // One tokenize scan per batch (giant-doc branch included) and one
     // gram explode+md5 scan (index merge + mark join) — every consumer
-    // reads the tracked checkpoint blocks, released at the end of the
-    // batch (a bare unpersist would be a no-op; see [[graft.ops.Ckpt]]).
-    val (tl0, tl0H) = graft.ops.Ckpt.tracked(Dedup.tokenLengths(batch))
-    // Handles release in finally: swapWrite THROWS by design on a failed
-    // rename (commitSwap), and a success-path-only release would leak two
-    // corpus-scale checkpoint block sets per failed batch for the session
-    // lifetime — unreliable-checkpoint blocks are invisible to the cache
-    // manager, so nothing else ever frees them. Releases ride
-    // [[releaseSuppressing]] because release() itself can throw (the Ckpt
-    // ownership tripwire): a bare finally would REPLACE the primary batch
-    // failure with the registry complaint and hide the root cause.
-    var primary: Throwable = null
-    try {
+    // reads the scoped checkpoint blocks, released at the end of the
+    // batch whether it commits or fails (swapWrite THROWS by design on a
+    // failed rename).
+    graft.ops.Ckpt.scoped(Dedup.tokenLengths(batch)) { tl0 =>
       val tl = tl0.filter(col("n") < maxDocTokens)
       // Evidence (the gram index) covers ALL docs including giants, same
       // as batch x213: a giant doc's spans still claim ownership and mark
       // later copies; only the EDIT below is restricted to sub-cap docs.
-      val (occ, occH) = graft.ops.Ckpt.tracked(Dedup.gramOccurrences(tl0, gramLen))
-      try {
+      graft.ops.Ckpt.scoped(Dedup.gramOccurrences(tl0, gramLen)) { occ =>
         val occB = occ.select(col("g"), struct(col("doc_id"), col("pos")).as("k"))
         // Two keyed set-minima over an occurrence-key multiset (g, k):
         // k1 = global first occurrence, k2 = second-smallest distinct key.
@@ -948,22 +938,9 @@ object Streams {
           case None => report
         }
         swapWrite(merged, reportPath, "exactSubstrScreen.report")
-      } catch { case t: Throwable => primary = t; throw t }
-      finally releaseSuppressing(occH, primary)
-    } catch { case t: Throwable => if (primary == null) primary = t; throw t }
-    finally releaseSuppressing(tl0H, primary)
-    ()
-  }
-
-  /** Release a checkpoint handle without masking an in-flight failure:
-    * if `primary` is set, a throwing release attaches as suppressed so
-    * the batch's root cause survives; on the success path it propagates
-    * (a tripwire hit with no prior failure IS the bug to surface). */
-  private def releaseSuppressing(h: graft.ops.Ckpt.Handle,
-      primary: Throwable): Unit =
-    try h.release() catch {
-      case t: Throwable if primary != null => primary.addSuppressed(t)
+      }
     }
+  }
 
   /** Maintenance compaction for [[exactSubstrScreenStream]]'s gram-
     * ownership index — the committed lifecycle policy for its state.

@@ -49,12 +49,20 @@ class CachesSpec extends SparkSuite {
     finally walk.close()
   }
 
-  test("lint: no cache map may store a Ckpt.Handle (loop-internal only)") {
-    val offenders = mainSources.collect {
-      case (p, src) if src.contains("TrieMap") && src.contains("Ckpt.Handle") => p
+  test("lint: only ops.Ckpt names a tracked checkpoint or its Handle") {
+    // Wider than the rule it replaces (no cache map may store a
+    // Ckpt.Handle), which still holds for every file.
+    val names = Seq("Ckpt.Handle", "Ckpt.tracked", "trackedObserved", "Ckpt.empty")
+    val offenders = mainSources.flatMap { case (p, src) =>
+      val named =
+        if (p.endsWith("ops/Ckpt.scala")) Nil else names.filter(src.contains)
+      val stored =
+        if (src.contains("TrieMap") && src.contains("Ckpt.Handle")) Seq("TrieMap") else Nil
+      (named ++ stored).map(n => s"$p: $n")
     }
     assert(offenders.isEmpty,
-      s"Ckpt.Handle stored in a memo cache (the r12 use-after-free shape): $offenders")
+      s"tracked checkpoints are created, held and released only in ops.Ckpt " +
+        s"(iterate, scoped): $offenders")
   }
 
   test("lint: DataFrame memo maps live only in ops.Ckpt and warehouse.View") {

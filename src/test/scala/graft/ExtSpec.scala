@@ -115,6 +115,38 @@ class ExtSpec extends SparkSuite {
     val (full, rounds2) = Dedup.componentsFromEdges(edges, nodes, maxIterations = 20)
     assert(full.select("cluster").as[Long].collect().forall(_ === 1L))
     assert(rounds2 > 1 && rounds2 <= 10, s"took $rounds2 rounds")
+    // Jobs per call: 10 (one round) and 52 (seven rounds); 12 and 54
+    // before the loop moved onto Ckpt.iterate. The initial edge count now
+    // comes from the initial checkpoint's own count job, and that folded
+    // count is the whole difference: a second count() of the checkpoint
+    // ran 2 jobs (AQE's map-stage job and the result job). The final edge
+    // state is the one RDD a call leaves persisted, as before.
+    assert(jobsOf(Dedup.componentsFromEdges(edges, nodes, maxIterations = 1)) === 10)
+    assert(jobsOf(Dedup.componentsFromEdges(edges, nodes, maxIterations = 20)) === 52)
+    assert(persistedBy(Dedup.componentsFromEdges(edges, nodes, 20)).size === 1)
+    // No edges: no round runs, and the empty initial state is kept.
+    val none = Seq.empty[(Long, Long)].toDF("doc_a", "doc_b")
+    var noneRounds = -1
+    assert(persistedBy { noneRounds = Dedup.componentsFromEdges(none, nodes)._2 }.size === 1)
+    assert(noneRounds === 0)
+  }
+
+  test("componentsFromEdges: a failing call leaves no persisted RDD") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import org.apache.spark.sql.execution.LogicalRDD
+    val nodes = (1L to 10L).toDF("doc_id")
+    val edges = (1L to 9L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // The first round's star frame fails to plan, with the initial edge
+    // state live.
+    val boom = new RuntimeException("round 1 fails")
+    val left = persistedBy {
+      val e = intercept[RuntimeException](failingPlans(boom)(p =>
+          p.exists(_.isInstanceOf[Window]) && p.exists(_.isInstanceOf[LogicalRDD])) {
+        Dedup.componentsFromEdges(edges, nodes)
+      })
+      assert(e eq boom)
+    }
+    assert(left.isEmpty, s"a failed call left RDDs $left persisted")
   }
 
   test("contamination flags train docs sharing an n-gram with eval, not disjoint ones") {
@@ -1469,6 +1501,36 @@ class ExtSpec extends SparkSuite {
     val r = Similarity.mmrRerank(emb, Seq(0L), poolK = 3, k = 2)
       .orderBy("round").select("round", "doc_id").as[(Int, Long)].collect().toSeq
     assert(r === Seq((1, 10L), (2, 12L)), s"expected a then c, got $r")
+    // Measured before the loop moved onto Ckpt.iterate: 16 jobs per call at
+    // k = 2 (the round-2 state is the one checkpoint the loop runs), 6 at
+    // k = 1 (no loop checkpoint). The pool and pair-similarity checkpoints
+    // stay with the result; k >= 2 also keeps the final state.
+    assert(jobsOf(Similarity.mmrRerank(emb, Seq(0L), poolK = 3, k = 2)) === 16)
+    assert(jobsOf(Similarity.mmrRerank(emb, Seq(0L), poolK = 3, k = 1)) === 6)
+    assert(persistedBy(Similarity.mmrRerank(emb, Seq(0L), poolK = 3, k = 2)).size === 3)
+    assert(persistedBy(Similarity.mmrRerank(emb, Seq(0L), poolK = 3, k = 1)).size === 2)
+  }
+
+  test("mmrRerank: a failed round leaves only the pool checkpoints") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+    val emb = Seq(
+      (0L, Array(1.0f, 0.0f), 0),
+      (10L, Array(0.99f, 0.1f), 0),
+      (11L, Array(0.98f, 0.12f), 0),
+      (12L, Array(0.6f, -0.7f), 0))
+      .toDF("vec_id", "embedding", "label")
+    // Round 3's frame fails to plan, after the round-2 state checkpointed.
+    val boom = new RuntimeException("round 3 fails")
+    val left = persistedBy {
+      val e = intercept[RuntimeException](failingPlans(boom)(_.exists(_.expressions.exists(
+          _.exists { case Alias(Literal(3, _), "round") => true; case _ => false }))) {
+        Similarity.mmrRerank(emb, Seq(0L), poolK = 3, k = 3)
+      })
+      assert(e eq boom)
+    }
+    // The pool and pair-similarity checkpoints are bare one-shot
+    // checkpoints, as on success; no round state is left.
+    assert(left.size === 2, s"a failed call left RDDs $left persisted")
   }
 
   test("effectiveTokens: duplicates discount to one copy's worth, uniques keep full mass") {

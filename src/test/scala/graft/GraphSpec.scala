@@ -2,6 +2,7 @@ package graft
 
 import graft.ext.Similarity
 import graft.ops.{Ckpt, Graph, PageRank}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hand-built-graph contracts for the triangle census and HITS — the
@@ -77,6 +78,29 @@ class GraphSpec extends SparkSuite {
     assert(r(3) === ((4L, 0L, base)))
     assert(Seq(r(0), r(1), r(2)).forall { case (_, h, a) => h === base && a === 0L })
     assert(r(4) === ((5L, 0L, 0L)))
+    // 22 jobs per call; 23 before HITS moved onto Ckpt.iterate. The final
+    // state carries both scores, so the output no longer joins the hub and
+    // auth states (that join's one job is the difference). The output
+    // checkpoint is the one RDD a call leaves persisted, as before.
+    assert(jobsOf(Graph.hits(edges, verts, 2)) === 22)
+    assert(persistedBy(Graph.hits(edges, verts, 2)).size === 1)
+  }
+
+  test("HITS: a failing call leaves no persisted RDD, its edge cache included") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val edges = Seq((1L, 4L), (2L, 4L), (3L, 4L)).toDF("src", "dst")
+    // The second half-round fails to plan: the edge cache and the first
+    // half-round's state are live by then.
+    val boom = new RuntimeException("half-round 2 fails")
+    val left = persistedBy {
+      val e = intercept[RuntimeException](failingPlans(boom)(p =>
+          p.exists(_.isInstanceOf[InMemoryRelation]) && p.exists(_.isInstanceOf[LogicalRDD])) {
+        Graph.hits(edges, (1L to 5L).toDF("id"), 2)
+      })
+      assert(e eq boom)
+    }
+    assert(left.isEmpty, s"a failed HITS call left RDDs $left persisted")
   }
 
   test("assortativity: star is perfectly disassortative, regular graph degenerates to NULL") {
@@ -210,15 +234,6 @@ class GraphSpec extends SparkSuite {
     assert(full === 3, s"non-converged run must use every round, ran $full")
   }
 
-  /** Ids of the RDDs `body` leaves persisted (set difference, so an older
-    * RDD the ContextCleaner drops meanwhile does not count). */
-  private def persistedBy(body: => Any): collection.Set[Int] = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    body
-    sc.getPersistentRDDs.keySet -- before
-  }
-
   test("iterative loops keep only the final state's blocks") {
     // Counts measured before the loops moved onto Ckpt.iterate: the final
     // loop state backs the result (label propagation, k-core, BFS); the
@@ -246,6 +261,13 @@ class GraphSpec extends SparkSuite {
       assert(e.getMessage.contains("labelPropagation: vertices is empty"))
     }
     assert(left.isEmpty, s"empty-vertex failure left RDDs $left persisted")
+    // An edge set failing inside conserving PageRank's scoped edge
+    // checkpoint leaves nothing either.
+    val bad = pe.select(
+      coalesce(assert_true(col("src") =!= 3L).cast("long"), col("src")).as("src"), col("dst"))
+    val leftPr = persistedBy(intercept[Exception](
+      PageRank.pagerankConserving(bad, (0L to 5L).toDF("id"), 3)))
+    assert(leftPr.isEmpty, s"a failed PageRank call left RDDs $leftPr persisted")
   }
 
   test("Ckpt.iterate releases the live state and rethrows when a step fails") {
@@ -253,7 +275,7 @@ class GraphSpec extends SparkSuite {
     var steps = 0
     val left = persistedBy {
       val e = intercept[IllegalStateException](
-        Ckpt.iterate((1L to 4L).toDF("id"), Seq(count(lit(1)).as("n")), 5) { (s, _) =>
+        Ckpt.iterate((1L to 4L).toDF("id"), Seq(count(lit(1)).as("n")), 5) { (s, _, _) =>
           steps += 1
           if (steps == 2) throw boom
           s.select((col("id") + 1).as("id"))
@@ -267,9 +289,70 @@ class GraphSpec extends SparkSuite {
     var r: Ckpt.Rounds = null
     val kept = persistedBy {
       r = Ckpt.iterate((1L to 4L).toDF("id"), Seq(count(lit(1)).as("n")), 5,
-        (_, now) => now("n") == 3L) { (s, _) => s.filter(col("id") > 1) }
+        (_, now) => now("n") == 3L) { (s, _, _) => s.filter(col("id") > 1) }
     }
     assert(r.rounds === 1 && r.probes("n") === 3L && r.state.count() === 3L)
     assert(kept.size === 1)
+  }
+
+  test("Ckpt.iterate frees a round whose own checkpoint job fails") {
+    // Round 2's frame fails on the executors, inside its checkpoint job:
+    // its blocks and the live round-1 state are freed, probed or not.
+    for (probes <- Seq(Seq(count(lit(1)).as("n")), Nil)) {
+      val left = persistedBy {
+        intercept[Exception](Ckpt.iterate((1L to 4L).toDF("id"), probes, 5) { (s, _, round) =>
+          if (round < 2) s.select((col("id") + 1).as("id"))
+          else s.select(
+            coalesce(assert_true(col("id") < 0L).cast("long"), col("id")).as("id"))
+        })
+      }
+      assert(left.isEmpty, s"probes $probes: a failed round left RDDs $left persisted")
+    }
+  }
+
+  /** Runs `body`, which registers a cached reader of a tracked checkpoint
+    * and throws `boom`; asserts that `boom` surfaces with the refused
+    * release attached as suppressed, then frees the refused blocks. */
+  private def assertReleaseSuppressed(boom: Exception)(
+      body: (DataFrame => Nothing) => Any): Unit = {
+    var held: DataFrame = null
+    def registerAndThrow(s: DataFrame): Nothing = {
+      held = Ckpt.registerCached(s, "GraphSpec.reader")
+      throw boom
+    }
+    val left = persistedBy {
+      val e = intercept[Exception](body(registerAndThrow))
+      assert(e eq boom, "the failure's own exception must surface")
+      assert(e.getSuppressed.exists {
+        case t: IllegalStateException => t.getMessage.contains("GraphSpec.reader")
+        case _ => false
+      }, s"the refused release must ride along: ${e.getSuppressed.toSeq}")
+    }
+    Ckpt.unregisterCached(held, "GraphSpec.reader")
+    assert(left.size === 1, s"only the refused state may stay: $left")
+    left.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+  }
+
+  test("a failed round or scope surfaces its own exception, not a refused release") {
+    assertReleaseSuppressed(new RuntimeException("boom in a round")) { fail =>
+      Ckpt.iterate((1L to 4L).toDF("id"), Nil, 3)((s, _, _) => fail(s))
+    }
+    assertReleaseSuppressed(new RuntimeException("boom in a scope")) { fail =>
+      Ckpt.scoped((1L to 4L).toDF("id"))(fail)
+    }
+  }
+
+  test("Ckpt.scoped frees its checkpoint after the body, and when the body fails") {
+    var n = 0L
+    val kept = persistedBy { n = Ckpt.scoped((1L to 4L).toDF("id"))(_.count()) }
+    assert(n === 4L)
+    assert(kept.isEmpty, s"a finished scope left RDDs $kept persisted")
+    val boom = new IllegalStateException("body fails")
+    val left = persistedBy {
+      val e = intercept[IllegalStateException](
+        Ckpt.scoped((1L to 4L).toDF("id")) { ck => ck.count(); throw boom })
+      assert(e eq boom)
+    }
+    assert(left.isEmpty, s"a failed scope left RDDs $left persisted")
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import graft.obs.JobStats
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session per suite (lazy, UTC, small shuffle width). */
@@ -22,6 +24,26 @@ trait SparkSuite extends AnyFunSuite {
     val stats = new JobStats(spark.sparkContext)
     try { stats.measure("body")(body); stats.counts("body").jobs }
     finally stats.close()
+  }
+
+  /** Ids of the RDDs `body` leaves persisted (set difference, so an older
+    * RDD the ContextCleaner drops meanwhile does not count). */
+  def persistedBy(body: => Any): collection.Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    body
+    sc.getPersistentRDDs.keySet -- before
+  }
+
+  /** Runs `body` with an optimizer rule that throws `boom` on the driver
+    * for the first plan matching `when`: a failure injected part-way
+    * through a call, after whatever the call materialized before it. */
+  def failingPlans[T](boom: Throwable)(when: LogicalPlan => Boolean)(body: => T): T = {
+    object FailMatching extends Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = if (when(plan)) throw boom else plan
+    }
+    spark.experimental.extraOptimizations = Seq(FailMatching)
+    try body finally spark.experimental.extraOptimizations = Nil
   }
 
   /** Runs `body` with the given SQL confs set, then restores them. */

@@ -675,6 +675,18 @@ class StreamingSpec extends SparkSuite {
       "over-limit doc must pass through skipped, never vanish")
   }
 
+  test("a failed exact-substring screen batch frees both scoped checkpoints") {
+    // The report's parent is a plain file, so its write fails after the
+    // index has committed, with both batch checkpoints live.
+    val dir = java.nio.file.Files.createTempDirectory("graft-essf-").toString
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(s"$dir/blocker"))
+    val batch = Seq((1L, (1 to 12).map(i => s"f$i").mkString(" "))).toDF("doc_id", "text")
+    val left = persistedBy(intercept[Exception](
+      Streams.exactSubstrScreenBatch(batch, s"$dir/gi", s"$dir/blocker/gr", 8, 1 << 20)))
+    assert(new java.io.File(s"$dir/gi").isDirectory, "the index must have committed")
+    assert(left.isEmpty, s"a failed batch left RDDs $left persisted")
+  }
+
   test("streaming exact-substring screen is CONSERVATIVE under out-of-order " +
     "arrival: already-ingested docs are never retroactively edited") {
     // The batch-equivalence anchor requires ascending doc_id batches; this
