@@ -62,7 +62,9 @@ import graft.warehouse.View
   *     median.
   *   - every rerun is counted by a [[JobStats]] collector, and bench.json
   *     (file only) carries each query's "structure": one
-  *     [jobs, stages, tasks, task_s] entry per rerun, in rerun order.
+  *     [jobs, stages, tasks, task_s] entry per rerun, in rerun order, and
+  *     the "regime" its reruns ran in (queries.Regime: "small", "large",
+  *     or "large/small" when they differ).
   *     Wall-clock on a shared host cannot tell contention from a
   *     regression; a changed structure is a changed program, so
   *     tools/bench_table.py --movers routes each mover by it.
@@ -120,9 +122,14 @@ object Bench {
     // Rerun timing for the median series: a rerun failure must NOT mark a
     // cold-successful query as failed in the headline (nor enter it twice),
     // so reruns record nothing — they only contribute a sample or don't.
+    // Each rerun also records the regime its frame ran in (file-only).
+    val regimes = scala.collection.mutable.Map.empty[String, Seq[String]]
     def timeQuiet(name: String): Double =
-      try Probe.run(spark, name, sfDir)
-      catch { case e: Throwable =>
+      try {
+        val r = Probe.run(spark, name, sfDir)
+        regimes(name) = regimes.getOrElse(name, Nil) ++ r.regime.map(_.name)
+        r.seconds
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $name rerun failed (median falls back): ${e.getMessage}")
         -1.0
       }
@@ -295,8 +302,12 @@ object Bench {
     }.mkString("{", ",", "}")
     val json =
       s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${timesJson(("_warmup" -> warmup) +: (colds ++ layoutTimes))},"median_total":${num(medianTotal)},"queries_median":${timesJson(medians)},"failed":$failedJson,"sf":"$sfDir"}"""
+    // A row whose reruns ran in different regimes reads "large/small".
+    val regimeJson = colds.flatMap { case (n, _) =>
+      regimes.get(n).map(rs => s"\"$n\":\"${rs.distinct.sorted.mkString("/")}\"")
+    }.mkString("{", ",", "}")
     val fileJson = json.dropRight(1) +
-      s""","cores":${spark.sparkContext.defaultParallelism},"structure":$structureJson}"""
+      s""","cores":${spark.sparkContext.defaultParallelism},"structure":$structureJson,"regime":$regimeJson}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench.json"), fileJson + "\n")
     spark.stop()
     // Printed after spark.stop() so no executor/log line can interleave.

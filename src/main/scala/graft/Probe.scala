@@ -1,7 +1,7 @@
 package graft
 
 import graft.obs.JobStats
-import graft.queries.Registry
+import graft.queries.{Regime, Registry}
 import org.apache.spark.sql.SparkSession
 
 /** Per-query inspection in Bench's session (see [[Session]]):
@@ -26,6 +26,9 @@ import org.apache.spark.sql.SparkSession
   *  - `plan`: the formatted physical plan (scan pushdowns, codegen spans,
   *    exchange count) of each named query, or of every benched query when
   *    none is named — the plan-diff half of an adjudication.
+  *
+  * `stages` and `plan` also print each query's [[Regime]] and the leaf
+  * bytes that chose it.
   *
   * An integer argument is `reps`, a path (an existing directory or
   * anything containing '/') is `sfDir`, anything else a query list.
@@ -55,7 +58,7 @@ object Probe {
     val spark = Session()
     mode match {
       case "time" => names.foreach { name =>
-        val times = (1 to reps).map(_ => run(spark, name, dir))
+        val times = (1 to reps).map(_ => run(spark, name, dir).seconds)
         val med = times.sorted.apply(times.size / 2)
         println(f"[qprobe] $name: ${times.map(t => f"$t%.2f").mkString(" ")}" +
           f" -> median $med%.2f s")
@@ -63,39 +66,44 @@ object Probe {
       case "stages" =>
         val stats = new JobStats(spark.sparkContext)
         for (name <- names; rep <- 1 to reps) {
-          val wall = stats.measure(name)(run(spark, name, dir))
-          printStages(stats, name, rep, wall, rep == reps)
+          val r = stats.measure(name)(run(spark, name, dir))
+          printStages(stats, name, rep, r, rep == reps)
         }
         stats.close()
       case "plan" =>
         (if (names.isEmpty) Registry.benchSet.map(_.name) else names).foreach { n =>
           println(s"\n===== $n =====")
-          Registry.queryMap(n)(spark, dir).explain("formatted")
+          val df = Registry.queryMap(n)(spark, dir)
+          println(s"regime: ${Regime.of(df).getOrElse("unknown")}")
+          df.explain("formatted")
         }
     }
     spark.stop()
   }
 
-  /** One memo-cold run of a registered query through the noop sink, in
-    * seconds: every memo cache is cleared first, as Bench's reruns clear
-    * them. */
-  def run(spark: SparkSession, name: String, dir: String): Double = {
+  /** One run's wall-clock and the regime its frame ran in. */
+  final case class Run(seconds: Double, regime: Option[Regime.Choice])
+
+  /** One memo-cold run of a registered query through the noop sink: every
+    * memo cache is cleared first, as Bench's reruns clear them. */
+  def run(spark: SparkSession, name: String, dir: String): Run = {
     ops.Ckpt.clearAll(spark)
     val t0 = System.nanoTime()
-    Registry.queryMap(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    val df = Registry.queryMap(name)(spark, dir)
+    df.write.format("noop").mode("overwrite").save()
+    Run((System.nanoTime() - t0) / 1e9, Regime.of(df))
   }
 
   /** Prints one rep's totals, and per-job and top-12 per-stage rows when
     * `detail`. */
-  private def printStages(stats: JobStats, name: String, rep: Int, wall: Double,
+  private def printStages(stats: JobStats, name: String, rep: Int, r: Run,
       detail: Boolean): Unit = {
     val jobs = stats.jobs(name)
     val c = stats.counts(name)
-    println(f"[sprobe] $name rep$rep wall=$wall%.2f s, " +
+    println(f"[sprobe] $name rep$rep wall=${r.seconds}%.2f s, " +
       f"${c.jobs} jobs (Σjob ${jobs.map(_.wallMs).sum / 1e3}%.2f s), " +
-      f"${c.stages} stages, ${c.tasks} tasks, Σtask ${c.taskMs / 1e3}%.2f s")
+      f"${c.stages} stages, ${c.tasks} tasks, Σtask ${c.taskMs / 1e3}%.2f s, " +
+      s"regime ${r.regime.getOrElse("unknown")}")
     if (detail) {
       jobs.sortBy(_.id).foreach { j =>
         println(f"[sprobe]   job ${j.id}%3d ${j.wallMs / 1e3}%6.2f s " +

@@ -318,7 +318,7 @@ object ScaleProbe {
     // understate the 1x time and bias the exponent toward zero.
     def medQ(name: String, dir: String): Double = {
       Probe.run(spark, name, dir)
-      Seq.fill(3)(Probe.run(spark, name, dir)).sorted.apply(1)
+      Seq.fill(3)(Probe.run(spark, name, dir).seconds).sorted.apply(1)
     }
     all.foreach { q =>
       val t1 = medQ(q, base)

@@ -6,6 +6,14 @@ import org.apache.spark.sql.SparkSession
   * the demos), so an oracle check, a probe reading and a bench sample all
   * measure the same planner configuration. `SPARK_GRAFT_CPUS` sets both
   * the local core count and the shuffle width.
+  *
+  * A registered query runs in one of two regimes (`queries.Regime`). When
+  * the leaves of its plan sum to at most `spark.sql.autoBroadcastJoinThreshold`
+  * (10 MB by default; at sf0.1 a scan of lineitem alone is over it), its
+  * final plan runs in a clone of this session with AQE off and one shuffle
+  * partition. Every other query, and the work a query body does before it
+  * returns its frame (memo fills, the `View.dw` build, checkpoints), runs
+  * under this configuration.
   */
 object Session {
   def apply(): SparkSession = {

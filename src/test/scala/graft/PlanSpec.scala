@@ -159,6 +159,8 @@ class PlanSpec extends SparkSuite {
       assert(View.cachedPartitions(View.dw(spark, dir)) === Some(1))
       assert(queries.Warehouse.defs.size === 11)
       for (q <- queries.Warehouse.defs) {
+        // `fn` bypasses Registry.queryMap's regime choice: one job each
+        // under AQE, the caller's regime. RegimeSpec covers the small one.
         val df = q.fn(spark, dir)
         assert(jobsOf(df.collect()) === 1, s"${q.name} ran more than one job")
         val exchanges = exchangesOutsideCache(df)

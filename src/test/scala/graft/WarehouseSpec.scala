@@ -85,6 +85,9 @@ class WarehouseSpec extends SparkSuite {
   }
 
   test("every registered query returns a stable schema and rows >= 0") {
+    // `fn` bypasses Registry.queryMap's regime choice: this checks every
+    // query as planned on the caller's session (AQE on). RegimeSpec checks
+    // the small regime.
     Registry.all.foreach { q =>
       val df = q.fn(spark, Sf)
       assert(df.columns.nonEmpty, s"${q.name} has no columns")

@@ -9,7 +9,8 @@ Usage:
 A row's structure is its (jobs, stages, tasks) over the memo-cold reruns
 Bench counted (bench.json "structure": one [jobs, stages, tasks, task_s]
 per rerun). A row whose reruns disagree is unstable; the table then shows
-each count as its lo-hi range. --movers lists, and exonerates none of:
+each count as its lo-hi range. The table and the movers also show each
+row's regime (bench.json "regime": small or large, see queries.Regime). --movers lists, and exonerates none of:
   1. every stable row whose structure differs from the committed row
      (a count outside the committed range), whatever its wall-clock;
   2. every row whose median is more than 2x the committed median with the
@@ -54,6 +55,7 @@ def render_table(b: dict) -> None:
     cold = b["queries"]
     med = b.get("queries_median", {})
     structure = b.get("structure", {})
+    regime = b.get("regime", {})
     print("# Per-query bench baseline")
     print()
     print(f"Generated {date.today().isoformat()} from `bench.json` "
@@ -69,6 +71,8 @@ def render_table(b: dict) -> None:
           "of each memo-cold rerun, counted by `graft.obs.JobStats` "
           "(stages = `JobStart.stageIds.size`, skipped stages included). A "
           "`lo-hi` range marks an unstable row: its reruns disagreed. "
+          "`regime` is the row's execution regime (`queries.Regime`): "
+          "`small` runs with AQE off and one shuffle partition. "
           "`_`-prefixed rows are engine fixtures (warmup, layout demos), "
           "not queries.")
     print()
@@ -87,15 +91,15 @@ def render_table(b: dict) -> None:
     print("Wall-clock on this shared host is not evidence on its own: a row "
           "moves only after its probe says why.")
     print()
-    print("| query | cold s | median s | jobs | stages | tasks |")
-    print("|---|---:|---:|---:|---:|---:|")
+    print("| query | cold s | median s | jobs | stages | tasks | regime |")
+    print("|---|---:|---:|---:|---:|---:|---|")
     for name in sorted(cold):
         m = med.get(name)
         ms = f"{m:.3f}" if m is not None else "—"
         rs = structure.get(name)
         counts = (" | ".join(cell(r) for r in ranges(rs)) if rs
                   else " | ".join("—" for _ in COUNTS))
-        print(f"| {name} | {cold[name]:.3f} | {ms} | {counts} |")
+        print(f"| {name} | {cold[name]:.3f} | {ms} | {counts} | {regime.get(name, '—')} |")
 
 
 ROW = re.compile(r"^\|\s*([A-Za-z0-9_]+)\s*\|\s*[-0-9.]+\s*\|\s*([-0-9.]+)\s*\|"
@@ -150,10 +154,11 @@ def movers_report(b: dict, baseline_path: str) -> None:
     if not rows:
         print("No movers.")
         return
-    print("| query | jobs / stages / tasks or median | route |")
-    print("|---|---|---|")
+    regime = b.get("regime", {})
+    print("| query | jobs / stages / tasks or median | regime | route |")
+    print("|---|---|---|---|")
     for name, kind, detail in rows:
-        print(f"| {name} | {detail} | {ROUTE[kind]} |")
+        print(f"| {name} | {detail} | {regime.get(name, '—')} | {ROUTE[kind]} |")
 
 
 def main() -> None:

@@ -119,6 +119,24 @@ class MoverRule(unittest.TestCase):
         outside["structure"]["x110_kcore"] = [[44, 91, 48, 2.3]] * 2
         self.assertEqual(listed(outside, base, "changed"), {"x110_kcore"})
 
+    def test_regime_is_shown_and_leaves_the_counts_alone(self):
+        b = bench(BEFORE)
+        b["regime"] = {n: "small" for n in BEFORE}
+        self.assertEqual(committed(b), committed(bench(BEFORE)))
+        with tempfile.NamedTemporaryFile("w", suffix=".md", delete=False) as f:
+            with contextlib.redirect_stdout(f):
+                bench_table.render_table(b)
+        after = bench(AFTER_A)
+        after["regime"] = {"x82_hits": "small"}
+        out = io.StringIO()
+        try:
+            with contextlib.redirect_stdout(out):
+                bench_table.movers_report(after, f.name)
+        finally:
+            os.unlink(f.name)
+        self.assertIn("| x82_hits | 57 / 103 / 224 → 61 / 115 / 258 | small |", out.getvalue())
+        self.assertIn("| x99_label_propagation | 40 / 76 / 271 → 43 / 85 / 289 | — |",
+                      out.getvalue())
 
 if __name__ == "__main__":
     unittest.main()
